@@ -27,37 +27,48 @@ from pyspark.sql.datasource import (
     InputPartition,
     WriterCommitMessage,
 )
-from pyspark.sql.types import StructType
+from pyspark.sql.types import StructField, StructType
 
 from .connection import connect, connect_writable
 from .scan import RemoteScanSpec
-from .schema import infer_schema_from_rows
+from .schema import infer_schema_from_rows, remote_type_to_spark
 from .unparse import split_filters
 
 
-def infer_remote_schema(spec: RemoteScanSpec) -> StructType:
-    """Driver-side schema inference (table.rs infer_schema parity).
+SAMPLE_ROWS = 100  # rows a DB-API backend's column types are inferred from
 
-    duckdb: DESCRIBE gives full types. sqlite/DB-API: LIMIT-0 probe for
-    names + a small row sample for types (sqlite cursors carry no type
-    metadata for query sources).
+
+def remote_schema(conn, spec: RemoteScanSpec, sample: tuple[list[str], list[tuple]] | None = None) -> StructType:
+    """The schema rule both read paths share (table.rs infer_schema
+    parity), on an open connection to spec's remote.
+
+    duckdb: DESCRIBE gives full types. sqlite/DB-API: cursor names + the
+    first SAMPLE_ROWS rows for types (sqlite cursors carry no type
+    metadata for query sources). ``sample`` is (names, rows) of spec's
+    source already fetched on ``conn``; without it the rows are fetched
+    here.
     """
-    from .schema import remote_type_to_spark
-    from pyspark.sql.types import StructField
+    if spec.options.backend == "duckdb":
+        described = conn.execute(
+            f"DESCRIBE SELECT * FROM {spec.dialect.wrap_subquery(spec.source_query())}"
+        ).fetchall()
+        return StructType(
+            [StructField(name, remote_type_to_spark(type_name), True) for name, type_name, *_ in described]
+        )
+    if sample is None:
+        cur = conn.cursor()
+        cur.execute(spec.dialect.compose(spec.table if spec.table else spec.query, limit=SAMPLE_ROWS))
+        sample = [d[0] for d in cur.description], cur.fetchall()
+    names, rows = sample
+    return infer_schema_from_rows(names, rows[:SAMPLE_ROWS])
 
-    src = spec.source_query()
+
+def infer_remote_schema(spec: RemoteScanSpec) -> StructType:
+    """Driver-side schema inference for a DataSource read: the shared
+    rule on a connection of its own, pruned to spec's columns."""
     conn = connect(spec.options)
     try:
-        if spec.options.backend == "duckdb":
-            rows = conn.execute(f"DESCRIBE SELECT * FROM {spec.dialect.wrap_subquery(src)}").fetchall()
-            fields = [StructField(name, remote_type_to_spark(type_name), True) for name, type_name, *_ in rows]
-            schema = StructType(fields)
-        else:
-            cur = conn.cursor()
-            cur.execute(spec.dialect.compose(spec.table if spec.table else spec.query, limit=100))
-            names = [d[0] for d in cur.description]
-            sample = cur.fetchall()
-            schema = infer_schema_from_rows(names, sample)
+        schema = remote_schema(conn, spec)
     finally:
         conn.close()
     if spec.columns:

@@ -34,6 +34,16 @@ class ConnectionOptions:
         d["backend"] = self.backend
         return d
 
+    def same_source(self, other: "ConnectionOptions") -> bool:
+        """Whether ``other`` reaches the same remote the same way: every
+        field equal except the client-side tuning fields."""
+        tuning = ("stream_chunk_size", "pool_max_size")
+        mine, theirs = self.to_dict(), other.to_dict()
+        for k in tuning:
+            mine.pop(k)
+            theirs.pop(k)
+        return mine == theirs
+
     @staticmethod
     def from_dict(d: dict) -> "ConnectionOptions":
         d = dict(d)

@@ -16,6 +16,7 @@ stream (`stream_chunk_size` still bounds each Arrow batch).
 from __future__ import annotations
 
 import json
+from contextlib import contextmanager
 from dataclasses import dataclass, field
 from typing import Iterator
 
@@ -134,29 +135,43 @@ class RemoteScanSpec:
         sql = self.remote_sql(extra_filters)
         conn = connect(self.options)
         try:
-            if self.options.backend == "duckdb":
-                # native Arrow path: zero row-materialization
-                reader = conn.execute(sql).fetch_record_batch(self.options.stream_chunk_size)
-                for batch in reader:
-                    yield _align(batch, arrow_schema)
-                return
-            cur = conn.cursor()
-            cur.execute(sql)
-            names = [d[0] for d in cur.description]
-            while True:
-                rows = cur.fetchmany(self.options.stream_chunk_size)
-                if not rows:
-                    break
-                cols = list(zip(*rows)) if rows else [[] for _ in names]
-                arrays = []
-                for i, fld in enumerate(arrow_schema):
-                    arrays.append(pa.array(cols[i] if i < len(cols) else [], type=fld.type))
-                yield pa.RecordBatch.from_arrays(arrays, schema=arrow_schema)
+            with remote_errors(self.options, sql):
+                if self.options.backend == "duckdb":
+                    # native Arrow path: zero row-materialization
+                    reader = conn.execute(sql).fetch_record_batch(self.options.stream_chunk_size)
+                    for batch in reader:
+                        yield align_batch(batch, arrow_schema)
+                    return
+                cur = conn.cursor()
+                cur.execute(sql)
+                while True:
+                    rows = cur.fetchmany(self.options.stream_chunk_size)
+                    if not rows:
+                        break
+                    yield rows_to_batch(rows, arrow_schema)
         finally:
             conn.close()
 
 
-def _align(batch: pa.RecordBatch, schema: pa.Schema) -> pa.RecordBatch:
+@contextmanager
+def remote_errors(options: ConnectionOptions, sql: str):
+    """Name the backend and the SQL on any error raised inside (the
+    exception keeps its type, so callers' handlers still match)."""
+    try:
+        yield
+    except Exception as e:
+        e.add_note(f"remote {options.backend} query: {sql}")
+        raise
+
+
+def rows_to_batch(rows: list[tuple], arrow_schema: pa.Schema) -> pa.RecordBatch:
+    """DB-API rows as one Arrow batch of ``arrow_schema`` (by position)."""
+    cols = list(zip(*rows)) or [[] for _ in arrow_schema]
+    arrays = [pa.array(c, type=f.type) for c, f in zip(cols, arrow_schema)]
+    return pa.RecordBatch.from_arrays(arrays, schema=arrow_schema)
+
+
+def align_batch(batch: pa.RecordBatch, schema: pa.Schema) -> pa.RecordBatch:
     if batch.schema == schema:
         return batch
     arrays = [batch.column(i).cast(schema.field(i).type) for i in range(batch.num_columns)]

@@ -21,23 +21,32 @@ Constructor parity map:
 
 from __future__ import annotations
 
+import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.pandas.types import to_arrow_schema
 from pyspark.sql.types import StructType
 
-from .datasource import RemoteTableDataSource, infer_remote_schema
+from ..session import ensure_runtime_confs
+from .connection import connect
+from .datasource import RemoteTableDataSource, infer_remote_schema, remote_schema
 from .options import ConnectionOptions
-from .scan import RemoteScanSpec
+from .scan import RemoteScanSpec, align_batch, remote_errors, rows_to_batch
+from .schema import parse_user_schema
 from .transform import RemoteTransform
 
 
 def _register_datasource(spark: SparkSession) -> None:
-    from ..session import ensure_runtime_confs
-
     ensure_runtime_confs(spark)  # driver-supplied sessions lack our configs
     key = "_dfrt_remote_table_registered"
     if not getattr(spark, key, False):
         spark.dataSource.register(RemoteTableDataSource)
         setattr(spark, key, True)
+
+
+def _datasource_frame(spark: SparkSession, spec: RemoteScanSpec, schema: StructType) -> DataFrame:
+    """A lazy read of ``spec`` through the Python DataSource."""
+    _register_datasource(spark)
+    return spark.read.format("remote_table").schema(schema).option("spec", spec.to_json()).load()
 
 
 class RemoteTable:
@@ -61,9 +70,7 @@ class RemoteTable:
             self.table = [str(s) for s in source]
         else:
             raise TypeError(f"source must be SQL string or table identifiers, got {type(source)}")
-        if schema is not None and not isinstance(schema, StructType):
-            from .schema import parse_user_schema
-
+        if schema is not None:
             schema = parse_user_schema(schema)
         self._schema: StructType | None = schema
         self.transform = transform
@@ -108,8 +115,13 @@ class RemoteTable:
         the remote columns, parsed + validated here (unknown columns and
         scalar functions are rejected) and rendered in the remote
         dialect, composed into the remote query alongside any
-        Catalyst-pushed filters."""
-        _register_datasource(spark)
+        Catalyst-pushed filters.
+
+        ``limit`` keeps ``read()`` a lazy DataSource scan, re-run at each
+        action, unlike aggregate/topk, which fetch a bounded result on the
+        driver. Every read serializing one scan spec is also what the
+        traced benchmark run relies on to replay the reader
+        (``perfbench/trace.py``), until the engine records its own spans."""
         pushed: list[str] = []
         if predicate is not None:
             from .predicate import render_predicate
@@ -132,12 +144,7 @@ class RemoteTable:
         if columns:
             by_name = {f.name: f for f in schema.fields}
             schema = StructType([by_name[c] for c in columns])
-        df = (
-            spark.read.format("remote_table")
-            .schema(schema)
-            .option("spec", spec.to_json())
-            .load()
-        )
+        df = _datasource_frame(spark, spec, schema)
         if limit is not None:
             df = df.limit(limit)  # remote LIMIT is per-partition; keep Spark semantics exact
         if self.transform is not None:
@@ -165,13 +172,18 @@ class RemoteTable:
         are (remote SQL expression, alias) pairs; ``filters`` are raw
         remote-dialect predicates (same contract as pushed_filters).
 
+        A result that fits in one ``stream_chunk_size`` chunk is fetched
+        eagerly on the driver, as a snapshot taken at call time, and
+        returned as a local frame; a larger one is read again through
+        the DataSource.
+
         Pass ``schema`` for backends whose cursors report no aggregate
         types (sqlite infers from a value sample otherwise)."""
         spec = self.spec()
         sql = spec.dialect.aggregate_query(
             self.table or self.query, group_by, aggs, filters=filters, having=having
         )
-        return RemoteTable(self.options, sql, schema=schema).read(spark)
+        return self._bounded(spark, sql, schema)
 
     def topk(
         self,
@@ -185,12 +197,65 @@ class RemoteTable:
         """Push ORDER BY + LIMIT (top-k) to the remote DB: the remote
         engine sorts and truncates, Spark receives exactly k rows (ties
         broken only if order_by ends in a unique key — caller's duty,
-        same as any top-k)."""
+        same as any top-k).
+
+        With ``k`` up to ``stream_chunk_size`` the rows are fetched
+        eagerly on the driver, as a snapshot taken at call time, and
+        returned as a local frame; a larger ``k`` reads through the
+        DataSource."""
         spec = self.spec()
         sql = spec.dialect.topk_query(
             self.table or self.query, order_by, k, columns=columns, filters=filters
         )
-        return RemoteTable(self.options, sql, schema=schema).read(spark)
+        return self._bounded(spark, sql, schema, max_rows=k)
+
+    def _bounded(self, spark: SparkSession, sql: str, schema, max_rows: int | None = None) -> DataFrame:
+        """Read the result of a bounded pushdown.
+
+        At most ``stream_chunk_size`` + 1 rows are fetched on the driver
+        over one connection. A result within one chunk becomes an Arrow
+        local frame: a ``LocalTableScan``, with no Python DataSource job
+        and no Spark task. A larger one, or a known ``max_rows`` above
+        the chunk, goes through the DataSource. The schema is the user
+        schema or the DataSource's rule (``remote_schema``), with the
+        fetched rows as the type sample."""
+        ensure_runtime_confs(spark)
+        schema = parse_user_schema(schema) if schema is not None else None
+        spec = RemoteScanSpec(
+            options=self.options, query=sql, columns=[f.name for f in schema.fields] if schema else None
+        )
+        cap = self.options.stream_chunk_size
+        if max_rows is not None and max_rows > cap:
+            return _datasource_frame(spark, spec, schema or infer_remote_schema(spec))
+        duck = self.options.backend == "duckdb"
+        sql = spec.remote_sql()
+        conn = connect(self.options)
+        try:
+            with remote_errors(self.options, sql):
+                if duck:
+                    schema = schema or remote_schema(conn, spec)
+                    chunk, n = [], 0
+                    for batch in conn.execute(sql).fetch_record_batch(cap + 1):
+                        chunk.append(batch)
+                        n += batch.num_rows
+                        if n > cap:
+                            break
+                else:
+                    cur = conn.cursor()
+                    cur.execute(sql)
+                    chunk = []
+                    while len(chunk) <= cap and (rows := cur.fetchmany(cap + 1 - len(chunk))):
+                        chunk.extend(rows)
+                    n = len(chunk)
+                    names = [d[0] for d in cur.description]
+                    schema = schema or remote_schema(conn, spec, (names, chunk))
+        finally:
+            conn.close()
+        if n > cap:
+            return _datasource_frame(spark, spec, schema)
+        arrow_schema = to_arrow_schema(schema)
+        batches = [align_batch(b, arrow_schema) for b in chunk] if duck else [rows_to_batch(chunk, arrow_schema)]
+        return spark.createDataFrame(pa.Table.from_batches(batches, schema=arrow_schema), schema=schema)
 
     def join_remote(
         self,
@@ -204,7 +269,7 @@ class RemoteTable:
         DB, compose the join into a single remote query (returned as a
         new RemoteTable, so further pushdown — aggregate/topk/filters —
         stacks on top of the joined source)."""
-        if self.options.to_dict() != other.options.to_dict():
+        if not self.options.same_source(other.options):
             raise ValueError(
                 "join_remote requires both tables on the same remote source; "
                 "use read() on each and join in Spark for cross-source federation"
@@ -227,8 +292,6 @@ class RemoteTable:
         Backends whose dialect can't push the count (mdb: mdbtools
         returns 0 for COUNT(*) — reference mdb/mod.rs
         fetch_table_row_count) stream the select-all and count rows."""
-        from .connection import connect
-
         spec = self.spec()
         try:
             count_sql = spec.count_sql()
@@ -311,8 +374,6 @@ class RemoteTable:
     def list_tables(options: ConnectionOptions) -> list[str]:
         """List user tables in the remote DB (the reference's
         `SourceCommand::ListMdbTables`, generalized per backend)."""
-        from .connection import connect
-
         if options.backend == "mdb":
             # Jet has no queryable catalog table; the ODBC metadata call is
             # the route (reference mdb/mod.rs list_tables via mdbtools)
@@ -349,7 +410,6 @@ class RemoteTable:
         scan). Names only: declared type spellings vary per backend
         (sqlite permits typeless columns), while names and order are
         stable across all of them."""
-        from .connection import connect
         from .dialect import dialect_for
 
         ident = dialect_for(options.backend).quote_ident(table)
@@ -541,7 +601,12 @@ class RemoteTable:
         parallelism (one connection per partition)."""
         if self.table is None:
             raise ValueError("insert requires a table source, not a query")
-        _register_datasource(df.sparkSession)
+        spark = df.sparkSession
+        _register_datasource(spark)
+        # the writer resolves "remote_table" through the calling thread's
+        # active JVM session, which a thread that never ran createDataFrame
+        # (or built the session) lacks; set it the way createDataFrame does
+        SparkSession._get_j_spark_session_class(spark._jvm).setActiveSession(spark._jsparkSession)
         if coalesce is None:
             coalesce = self.options.backend in ("sqlite", "duckdb")
         out = df.coalesce(1) if coalesce else df

@@ -522,12 +522,163 @@ def test_join_pushdown_same_source_only(spark, sqlite_db, tmp_path):
     )
     got = {(r.id, r.name) for r in joined.read(spark).collect()}
     assert got == {(1, "Tom"), (2, "Jerry"), (3, "Spike")}
+    # tables that differ only in client-side tuning still share a source
+    tuned = SqliteConnectionOptions(path=sqlite_db, stream_chunk_size=7, pool_max_size=3)
+    joined = RemoteTable(opts, ["simple_table"]).join_remote(
+        RemoteTable(tuned, ["simple_table"]),
+        on=[("id", "id")], left_cols=["id"], right_cols=["name"],
+    )
+    assert {(r.id, r.name) for r in joined.read(spark).collect()} == got
     other = SqliteConnectionOptions(path=str(tmp_path / "other.db"))
     with pytest.raises(ValueError, match="same remote source"):
         RemoteTable(opts, ["simple_table"]).join_remote(
             RemoteTable(other, ["simple_table"]), on=[("id", "id")],
             left_cols=["id"], right_cols=["name"],
         )
+
+
+def test_insert_from_a_fresh_thread(spark, sqlite_db):
+    # a new Python thread maps to a JVM thread with no active session,
+    # which the writer's data-source lookup needs
+    import threading
+
+    opts = SqliteConnectionOptions(path=sqlite_db)
+    conn = sqlite3.connect(sqlite_db)
+    conn.execute("CREATE TABLE thread_sink (id INTEGER, name TEXT)")
+    conn.commit()
+    conn.close()
+    df = spark.createDataFrame([(1, "a"), (2, "b")], "id long, name string")
+    errors: list[BaseException] = []
+
+    def write():
+        try:
+            RemoteTable(opts, ["thread_sink"]).insert(df)
+        except BaseException as e:  # noqa: BLE001 — re-raised below
+            errors.append(e)
+
+    th = threading.Thread(target=write)
+    th.start()
+    th.join(timeout=120)
+    assert not th.is_alive()
+    if errors:
+        raise errors[0]
+    assert RemoteTable(opts, ["thread_sink"]).count() == 2
+
+
+# -- bounded pushdowns answered on the driver --------------------------------
+def _plan(df) -> str:
+    return df._jdf.queryExecution().executedPlan().toString()
+
+
+def _sorted_rows(df) -> list:
+    return sorted((tuple(r) for r in df.collect()), key=repr)
+
+
+def _assert_matches_datasource(spark, df, opts, sql, schema=None):
+    """df (driver path) against the same composed SQL read through the
+    DataSource: the same rows and StructType, and no Spark scan job."""
+    ref = RemoteTable(opts, sql, schema=schema).read(spark)
+    assert df.schema == ref.schema
+    assert _sorted_rows(df) == _sorted_rows(ref)
+    assert "LocalTableScan" in _plan(df) and "BatchScan" in _plan(ref)
+
+
+@pytest.fixture(scope="module")
+def typed_remotes(tmp_path_factory):
+    """sqlite and duckdb copies of one table with a NULL-only group.
+    sqlite stores no decimal or timestamp type: its decimal comes from
+    integer cents under a user schema, and it has no timestamp column."""
+    import duckdb
+
+    d = tmp_path_factory.mktemp("bounded")
+    rows = [
+        ("a", 1234, b"\x00\xff", "it's", 1),
+        ("a", None, None, None, None),
+        ("b", 150, b"x", "x", 2),
+        ("c", None, None, None, None),
+    ]
+    conn = sqlite3.connect(str(d / "t.db"))
+    conn.execute("CREATE TABLE typed (g TEXT, cents INTEGER, b BLOB, s TEXT, n INTEGER)")
+    conn.executemany("INSERT INTO typed VALUES (?, ?, ?, ?, ?)", rows)
+    conn.commit()
+    conn.close()
+    conn = duckdb.connect(str(d / "t.duckdb"))
+    conn.execute(
+        "CREATE TABLE typed (g VARCHAR, cents INTEGER, b BLOB, s VARCHAR, n BIGINT, "
+        "d DECIMAL(10,3), ts TIMESTAMP)"
+    )
+    for i, (g, cents, b, s_, n) in enumerate(rows):
+        conn.execute(
+            "INSERT INTO typed VALUES (?, ?, ?, ?, ?, ?, ?)",
+            [g, cents, b, s_, n, None if cents is None else cents / 1000,
+             None if n is None else dt.datetime(2026, 1, 2, 3, 4, 5, 123456 * i)],
+        )
+    conn.close()
+    return {
+        "sqlite": SqliteConnectionOptions(path=str(d / "t.db")),
+        "duckdb": DuckdbConnectionOptions(path=str(d / "t.duckdb")),
+    }
+
+
+@pytest.mark.parametrize("backend", ["sqlite", "duckdb"])
+def test_bounded_pushdowns_match_datasource(spark, typed_remotes, backend):
+    opts = typed_remotes[backend]
+    t = RemoteTable(opts, ["typed"])
+    d = dialect_for(backend)
+    aggs = [("MAX(b)", "b"), ("MAX(s)", "s"), ("SUM(n)", "n"), ("COUNT(*)", "rows")]
+    if backend == "duckdb":
+        aggs += [("MAX(d)", "d"), ("MAX(ts)", "ts")]
+    # inferred schema: both paths must apply the same rule
+    df = t.aggregate(spark, group_by=["g"], aggs=aggs)
+    _assert_matches_datasource(spark, df, opts, d.aggregate_query(["typed"], ["g"], aggs))
+    assert len(df.collect()) == 3
+    # user schema, with a decimal
+    aggs = [("SUM(cents)", "cents"), ("MAX(s)", "s")]
+    schema = "g string, cents decimal(20,0), s string"
+    df = t.aggregate(spark, group_by=["g"], aggs=aggs, schema=schema)
+    _assert_matches_datasource(spark, df, opts, d.aggregate_query(["typed"], ["g"], aggs), schema)
+    order = [("g", "ASC"), ("n", "DESC")]
+    df = t.topk(spark, order_by=order, k=3)
+    _assert_matches_datasource(spark, df, opts, d.topk_query(["typed"], order, 3))
+
+
+@pytest.mark.parametrize("backend", ["sqlite", "duckdb"])
+def test_bounded_pushdowns_past_one_chunk_use_datasource(spark, typed_remotes, backend):
+    opts = typed_remotes[backend]
+    t = RemoteTable(type(opts)(path=opts.path, stream_chunk_size=2), ["typed"])
+    aggs = [("COUNT(*)", "rows")]
+    df = t.aggregate(spark, group_by=["g"], aggs=aggs)
+    assert "BatchScan" in _plan(df) and "LocalTableScan" not in _plan(df)
+    assert _sorted_rows(df) == [("a", 2), ("b", 1), ("c", 1)]
+    df = t.topk(spark, order_by=[("g", "ASC"), ("n", "DESC")], k=3)
+    assert "BatchScan" in _plan(df) and "LocalTableScan" not in _plan(df)
+    assert [r.g for r in df.collect()] == ["a", "a", "b"]
+    # two rows fit the chunk
+    df = t.topk(spark, order_by=[("g", "ASC"), ("n", "DESC")], k=2)
+    assert "LocalTableScan" in _plan(df) and len(df.collect()) == 2
+    # zero groups: an empty frame with the user schema or the inferred one
+    none = ("1 = 0",)
+    df = t.aggregate(spark, group_by=["g"], aggs=aggs, filters=none, schema="g string, rows bigint")
+    assert df.collect() == [] and df.schema.simpleString() == "struct<g:string,rows:bigint>"
+    df = t.aggregate(spark, group_by=["g"], aggs=aggs, filters=none)
+    sql = dialect_for(backend).aggregate_query(["typed"], ["g"], aggs, filters=none)
+    _assert_matches_datasource(spark, df, opts, sql)
+    assert df.collect() == []
+
+
+def test_remote_errors_name_backend_and_sql(spark, sqlite_db):
+    import pyarrow as pa
+
+    opts = SqliteConnectionOptions(path=sqlite_db)
+    aggs = [("SUM(", "x")]
+    sql = dialect_for("sqlite").aggregate_query(["simple_table"], ["name"], aggs)
+    with pytest.raises(sqlite3.OperationalError) as err:
+        RemoteTable(opts, ["simple_table"]).aggregate(spark, group_by=["name"], aggs=aggs)
+    assert any("sqlite" in n and sql in n for n in err.value.__notes__)
+    spec = RemoteScanSpec(options=opts, query="SELECT no_such_col FROM simple_table")
+    with pytest.raises(sqlite3.OperationalError) as err:
+        list(spec.fetch_arrow((), pa.schema([("no_such_col", pa.int64())])))
+    assert err.value.__notes__ == [f"remote sqlite query: {spec.remote_sql()}"]
 
 
 def test_mysql_join_query_quoting():

@@ -151,6 +151,29 @@ def test_count1_agg_live(spark, pg):
     assert got[0].n == 100
 
 
+def test_bounded_pushdowns_match_datasource_live(spark, pg):
+    """Driver-path aggregate and top-k against the same composed SQL read
+    through the DataSource: decimal, timestamp, binary, string, NULLs."""
+    from datafusion_remote_table_spark.remote.dialect import dialect_for
+
+    d = dialect_for("postgres")
+    t = RemoteTable(pg, ["pg_types"])
+    aggs = [("MAX(numeric_col)", "d"), ("MAX(ts_col)", "ts"), ("MAX(text_col)", "s"), ("COUNT(*)", "n")]
+    cols = ["int4_col", "numeric_col", "ts_col", "bytea_col", "text_col"]
+    order = [("int4_col", "ASC")]
+    for df, sql in (
+        (t.aggregate(spark, group_by=["bool_col"], aggs=aggs), d.aggregate_query(["pg_types"], ["bool_col"], aggs)),
+        (t.topk(spark, order_by=order, k=2, columns=cols), d.topk_query(["pg_types"], order, 2, columns=cols)),
+    ):
+        ref = RemoteTable(pg, sql).read(spark)
+        assert df.schema == ref.schema
+        assert sorted(map(tuple, df.collect()), key=repr) == sorted(map(tuple, ref.collect()), key=repr)
+        assert "LocalTableScan" in df._jdf.queryExecution().executedPlan().toString()
+    full = next(r for r in df.collect() if r.int4_col is not None)
+    assert (full.numeric_col, bytes(full.bytea_col)) == (Decimal("12.345"), b"\x00\xff")
+    assert full.ts_col == dt.datetime(2026, 1, 2, 3, 4, 5, 123456)
+
+
 def test_partitioned_read_live(spark, pg):
     df = RemoteTable(pg, ["pg_nums"]).read(
         spark, partition_column="id", fetch_partitions=4
