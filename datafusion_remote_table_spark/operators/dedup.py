@@ -25,7 +25,7 @@ from ..functions.text import content_fingerprint, ngram_shingles
 # DataFrame is consumed (each is referenced 2-3x inside one plan), so the
 # functions cannot unpersist before returning; instead every persist is
 # tracked here and `release_persisted()` reclaims the storage pool between
-# queries (bench._clear_stagings calls it alongside the plans-layer caches).
+# queries (perfbench/workloads.py calls it alongside the plans-layer caches).
 _PERSISTED: list = []
 
 
@@ -319,7 +319,7 @@ def pagerank(
     partitioning. Each power round is lineage-truncated
     (localCheckpoint): the unrolled-CTE spelling re-executes every
     earlier round inside each later one (measured 16 -> 189 s at
-    1x -> 16x in bench_scale before the split). Returns
+    1x -> 16x in the document-scale sweep before the split). Returns
     (node, degree, score_fp, score).
     """
     a, b = F.col(a_col), F.col(b_col)

@@ -5970,7 +5970,7 @@ def _sql_graph_pagerank(E, pairs_src=None):
 def dedup_graph_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     # the unrolled CTE spelling (the oracle) re-executes every earlier
     # round inside each later one — measured 16→189 s at 1x→16x in
-    # bench_scale before this split. The Spark runner iterates instead:
+    # the document-scale sweep before this split. The Spark runner iterates instead:
     # each power round is checkpointed (lineage truncated, same trade as
     # the BPE chain), so round k reads round k-1's ROWS, not its plan.
     # _pr_ew_sql references pairs TWICE (both edge directions), and

@@ -154,20 +154,23 @@ def _valve_for(options: ConnectionOptions) -> PoolValve | None:
     return PoolValve(identity, max_size)
 
 
-def connect(options: ConnectionOptions):
+def connect(options: ConnectionOptions, read_only: bool = True):
+    """A DB-API connection to options' remote, holding one valve slot
+    until close(). ``read_only`` matters for duckdb alone: read-only
+    opens let N executor tasks share one database file."""
     valve = _valve_for(options)
     if valve is None:
-        return _raw_connect(options)
+        return _raw_connect(options, read_only)
     valve.acquire()
     try:
-        raw = _raw_connect(options)
+        raw = _raw_connect(options, read_only)
     except BaseException:
         valve.release()
         raise
     return _ValvedConnection(raw, valve)
 
 
-def _raw_connect(options: ConnectionOptions):
+def _raw_connect(options: ConnectionOptions, read_only: bool):
     backend = options.backend
     if backend == "sqlite":
         import sqlite3
@@ -176,9 +179,10 @@ def _raw_connect(options: ConnectionOptions):
     if backend == "duckdb":
         import duckdb
 
-        # read_only so N executor tasks can share one database file
-        return duckdb.connect(options.path, read_only=True)
-    if backend == "postgres":
+        return duckdb.connect(options.path, read_only=read_only)
+    if backend in ("postgres", "gaussdb"):
+        # GaussDB speaks the Postgres wire protocol (reference gaussdb.rs
+        # uses a tokio-postgres fork); any Postgres driver works
         try:
             import psycopg2  # type: ignore
         except ImportError:
@@ -225,29 +229,6 @@ def _raw_connect(options: ConnectionOptions):
             password=options.password,
             service_name=options.service_name,
         )
-    if backend == "gaussdb":
-        # GaussDB speaks the Postgres wire protocol (reference gaussdb.rs
-        # uses a tokio-postgres fork); any Postgres driver works, including
-        # the pure-Python pgwire fallback
-        try:
-            import psycopg2  # type: ignore
-        except ImportError:
-            from . import pgwire
-
-            return pgwire.connect(
-                host=options.host,
-                port=options.port,
-                user=options.username,
-                password=options.password,
-                dbname=options.database,
-            )
-        return psycopg2.connect(
-            host=options.host,
-            port=options.port,
-            user=options.username,
-            password=options.password,
-            dbname=options.database,
-        )
     if backend == "dm":
         try:
             import dmPython  # type: ignore
@@ -285,17 +266,4 @@ def connect_writable(options: ConnectionOptions):
     if options.backend == "mdb":
         # parity: reference mdb/mod.rs insert() is an explicit error
         raise NotImplementedError("insert is not supported for the mdb backend")
-    if options.backend != "duckdb":
-        return connect(options)
-    valve = _valve_for(options)
-    if valve is not None:
-        valve.acquire()
-    try:
-        import duckdb
-
-        raw = duckdb.connect(options.path, read_only=False)
-    except BaseException:
-        if valve is not None:
-            valve.release()
-        raise
-    return raw if valve is None else _ValvedConnection(raw, valve)
+    return connect(options, read_only=False)

@@ -121,65 +121,60 @@ class RemoteCommit(WriterCommitMessage):
 
 
 class RemoteTableWriter(DataSourceArrowWriter):
-    """Insert path (insert.rs parity): each task streams its Arrow batches
-    into the remote table with chunked executemany. File-backed remotes
-    (sqlite/duckdb) are single-writer: insert through coalesce(1), as
-    RemoteTable.insert() does; server backends take parallel writers.
+    """Insert path (insert.rs parity), all-or-nothing in both modes.
 
-    Overwrite goes through a staging table: tasks write into the staging
-    copy, and only `commit()` (after every task succeeded) truncates the
-    target and swaps the rows in, in one transaction on one connection —
-    a failed or aborted job leaves the target untouched (the reference's
-    insert path never destroys data before a successful write either)."""
+    The writer creates the job's staging table (an empty copy of the
+    target's columns); every task streams its Arrow batches into it in
+    one transaction of its own (chunked executemany; DuckDB ingests the
+    Arrow batches directly). Only `commit()`, after every task
+    succeeded, copies the staged rows into the target by the writer's
+    column list (so target defaults fill the columns the DataFrame
+    lacks) and drops the staging table, in one transaction on one
+    connection; overwrite first deletes the target's rows in that same
+    transaction. `abort()` drops the staging table, so a failed or
+    aborted job leaves the target untouched (the reference's insert path
+    never leaves a partial write visible either).
+
+    File-backed remotes (sqlite/duckdb) are single-writer: insert
+    through coalesce(1), as RemoteTable.insert() does; server backends
+    take parallel writers."""
 
     def __init__(self, spec: RemoteScanSpec, schema: StructType, overwrite: bool = False):
         if not spec.table:
             raise ValueError("insert requires a table source, not a query")
+        import uuid
+
         self.spec = spec
         self.columns = [f.name for f in schema.fields]
         self.overwrite = overwrite
-        if overwrite:
-            import uuid
-
-            d = spec.dialect
-            self.staging = f"__{spec.table[-1]}_staging_{uuid.uuid4().hex[:8]}"
-            conn = connect_writable(spec.options)
-            try:
-                cur = conn.cursor()
-                cur.execute(
-                    f"CREATE TABLE {d.quote_ident(self.staging)} AS "
-                    f"SELECT * FROM {d.table_ref(spec.table)} WHERE 1 = 0"
-                )
-                conn.commit()
-            finally:
-                conn.close()
-        else:
-            self.staging = None
-
-    def _target_ref(self) -> str:
-        d = self.spec.dialect
-        return d.quote_ident(self.staging) if self.staging else d.table_ref(self.spec.table)
+        self.staging = f"__{spec.table[-1]}_staging_{uuid.uuid4().hex[:8]}"
+        d = spec.dialect
+        conn = connect_writable(spec.options)
+        try:
+            conn.cursor().execute(
+                f"CREATE TABLE {d.quote_ident(self.staging)} AS "
+                f"SELECT * FROM {d.table_ref(spec.table)} WHERE 1 = 0"
+            )
+            conn.commit()
+        finally:
+            conn.close()
 
     def commit(self, messages) -> None:
-        if not self.overwrite:
-            return
         d = self.spec.dialect
+        target, staging = d.table_ref(self.spec.table), d.quote_ident(self.staging)
+        cols = ", ".join(d.quote_ident(c) for c in self.columns)
         conn = connect_writable(self.spec.options)
         try:
             cur = conn.cursor()
-            cur.execute(f"DELETE FROM {d.table_ref(self.spec.table)}")
-            cur.execute(
-                f"INSERT INTO {d.table_ref(self.spec.table)} "
-                f"SELECT * FROM {d.quote_ident(self.staging)}"
-            )
-            cur.execute(f"DROP TABLE {d.quote_ident(self.staging)}")
+            if self.overwrite:
+                cur.execute(f"DELETE FROM {target}")
+            cur.execute(f"INSERT INTO {target} ({cols}) SELECT {cols} FROM {staging}")
+            cur.execute(f"DROP TABLE {staging}")
             conn.commit()
         finally:
             conn.close()
 
     def abort(self, messages) -> None:
-        if not self.overwrite:
-            return
         conn = connect_writable(self.spec.options)
         try:
             conn.cursor().execute(f"DROP TABLE {self.spec.dialect.quote_ident(self.staging)}")
@@ -191,7 +186,7 @@ class RemoteTableWriter(DataSourceArrowWriter):
 
     def write(self, iterator) -> RemoteCommit:
         d = self.spec.dialect
-        table_ref = self._target_ref()
+        staging = d.quote_ident(self.staging)
         cols = ", ".join(d.quote_ident(c) for c in self.columns)
         conn = connect_writable(self.spec.options)
         try:
@@ -199,14 +194,15 @@ class RemoteTableWriter(DataSourceArrowWriter):
                 # Arrow-native path: register each batch and INSERT..SELECT —
                 # DuckDB's executemany re-binds a prepared statement per row
                 # (~600 rows/s); the relation scan ingests the Arrow buffers
-                # directly (~1M rows/s measured in bench_remote.py).
+                # directly (152k rows/s end to end at 1M rows, docs/SCALE.md).
                 import pyarrow as pa
 
+                conn.begin()  # a failed task stages none of its batches
                 for batch in iterator:
                     tbl = pa.Table.from_batches([batch])
                     conn.register("__dfrt_insert_batch", tbl)
                     conn.execute(
-                        f"INSERT INTO {table_ref} ({cols}) "
+                        f"INSERT INTO {staging} ({cols}) "
                         f"SELECT * FROM __dfrt_insert_batch"
                     )
                     conn.unregister("__dfrt_insert_batch")
@@ -214,7 +210,7 @@ class RemoteTableWriter(DataSourceArrowWriter):
                 return RemoteCommit()
             style = "%s" if self.spec.options.backend in ("postgres", "mysql") else "?"
             placeholders = ", ".join([style] * len(self.columns))
-            sql = f"INSERT INTO {table_ref} ({cols}) VALUES ({placeholders})"
+            sql = f"INSERT INTO {staging} ({cols}) VALUES ({placeholders})"
             cur = conn.cursor()
             for batch in iterator:
                 rows = [tuple(row.values()) for row in batch.to_pylist()]

@@ -16,65 +16,26 @@ Usage:
               .option("key_column", "id")
               .load())
 
-Scale: the default reader is a partition-planning DataSourceStreamReader
+Scale: there is one reader, a partition-planning DataSourceStreamReader
 — the driver only probes MIN/MAX of the key column per microbatch (an
 indexed aggregate on the remote side), splits the (start, end] key range
 into `fetch_partitions` disjoint slices, and each slice is fetched ON AN
-EXECUTOR through the same Arrow path as the batch DataSource. Backfill
-of a large table therefore parallelizes like a batch read; Spark
-state/offsets stay O(1). `.option("reader", "simple")` selects the
-driver-side SimpleDataSourceStreamReader instead (fewer moving parts for
-trickle-rate tails).
+EXECUTOR through the same Arrow path as the batch DataSource, in
+`stream_chunk_size` batches rather than one fetchall() per microbatch.
+Backfill of a large table therefore parallelizes like a batch read;
+Spark state/offsets stay O(1). A trickle-rate tail, a non-integer key
+or `fetch_partitions=1` is one slice on the same path.
 """
 
 from __future__ import annotations
 
-from typing import Iterator, Sequence, Tuple
+from typing import Sequence
 
-from pyspark.sql.datasource import (
-    DataSource,
-    DataSourceStreamReader,
-    InputPartition,
-    SimpleDataSourceStreamReader,
-)
+from pyspark.sql.datasource import DataSource, DataSourceStreamReader, InputPartition
 from pyspark.sql.types import StructType
 
 from .connection import connect
 from .scan import RemoteScanSpec
-
-
-class RemoteTableSimpleStreamReader(SimpleDataSourceStreamReader):
-    def __init__(self, spec: RemoteScanSpec, key_column: str, schema: StructType):
-        self.spec = spec
-        self.key_column = key_column
-        self.schema = schema
-
-    def initialOffset(self) -> dict:
-        return {"last_key": None}
-
-    def _fetch(self, last_key) -> tuple[list, dict]:
-        d = self.spec.dialect
-        key = d.quote_ident(self.key_column)
-        cols = ", ".join(d.quote_ident(f.name) for f in self.schema.fields)
-        src = d.wrap_subquery(self.spec.source_query())
-        where = f"WHERE {key} > {d.literal(last_key)}" if last_key is not None else ""
-        sql = f"SELECT {cols} FROM {src} {where} ORDER BY {key}"
-        conn = connect(self.spec.options)
-        try:
-            cur = conn.cursor()
-            cur.execute(sql)
-            rows = cur.fetchall()
-        finally:
-            conn.close()
-        new_last = rows[-1][[f.name for f in self.schema.fields].index(self.key_column)] if rows else last_key
-        return rows, {"last_key": new_last}
-
-    def read(self, start: dict) -> Tuple[Iterator[tuple], dict]:
-        rows, end = self._fetch(start.get("last_key"))
-        return iter(rows), end
-
-    def commit(self, end: dict) -> None:
-        pass  # offsets live in the Spark checkpoint; nothing remote to ack
 
 
 class RemoteKeyRangePartition(InputPartition):
@@ -161,17 +122,5 @@ class RemoteTableStreamDataSource(DataSource):
         return "remote_table_stream"
 
     def streamReader(self, schema: StructType) -> RemoteTableStreamReader:
-        if self.options.get("reader") == "simple":
-            from pyspark.errors import PySparkNotImplementedError
-
-            # fall through to simpleStreamReader (driver-side fetch)
-            raise PySparkNotImplementedError(
-                errorClass="NOT_IMPLEMENTED",
-                messageParameters={"feature": "reader=simple selects simpleStreamReader"},
-            )
         spec = RemoteScanSpec.from_json(self.options["spec"])
         return RemoteTableStreamReader(spec, self.options["key_column"], schema)
-
-    def simpleStreamReader(self, schema: StructType) -> RemoteTableSimpleStreamReader:
-        spec = RemoteScanSpec.from_json(self.options["spec"])
-        return RemoteTableSimpleStreamReader(spec, self.options["key_column"], schema)

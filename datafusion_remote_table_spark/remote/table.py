@@ -596,7 +596,9 @@ class RemoteTable:
     def insert(self, df: DataFrame, mode: str = "append", coalesce: bool | None = None) -> None:
         """Insert a DataFrame into the remote table (insert.rs parity).
 
-        File-backed remotes (sqlite/duckdb) are single-writer, so the
+        All-or-nothing in both modes: the job's rows are staged and only
+        copied into the table once every task succeeded (see
+        RemoteTableWriter). File-backed remotes (sqlite/duckdb) are single-writer, so the
         default coalesces to one task; server backends write with full
         parallelism (one connection per partition)."""
         if self.table is None:

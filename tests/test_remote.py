@@ -263,8 +263,10 @@ def test_limit_with_partitions_stays_exact(spark, sqlite_db):
     assert df.count() == 2
 
 
-# -- overwrite staging (insert.rs never destroys data pre-commit) -----------
+# -- staged writes (insert.rs never leaves a partial write visible) ---------
 def test_overwrite_stages_and_aborts_cleanly(spark, sqlite_db):
+    """Both modes stage: the writer creates an empty staging table and
+    leaves the target alone until commit; abort drops the staging."""
     from datafusion_remote_table_spark.remote.datasource import RemoteTableWriter
     from pyspark.sql.types import StructType
 
@@ -275,23 +277,109 @@ def test_overwrite_stages_and_aborts_cleanly(spark, sqlite_db):
     assert before == 1
 
     schema = StructType.fromDDL("id bigint, name string")
-    w = RemoteTableWriter(t.spec(), schema, overwrite=True)
-    # writer construction must NOT touch the target (old code DELETEd here)
-    assert t.count() == before
-    # staging table exists and is empty
-    con = sqlite3.connect(sqlite_db)
-    assert con.execute(f"SELECT COUNT(*) FROM [{w.staging}]").fetchone()[0] == 0
-    con.close()
-    # abort drops staging, target still intact
-    w.abort([])
-    con = sqlite3.connect(sqlite_db)
-    names = [r[0] for r in con.execute("SELECT name FROM sqlite_master WHERE type='table'")]
-    con.close()
-    assert w.staging not in names
-    assert t.count() == before
-    # a real overwrite still swaps in the new rows
+    for overwrite in (False, True):
+        w = RemoteTableWriter(t.spec(), schema, overwrite=overwrite)
+        # writer construction must NOT touch the target (old code DELETEd here)
+        assert t.count() == before
+        # staging table exists and is empty
+        con = sqlite3.connect(sqlite_db)
+        assert con.execute(f"SELECT COUNT(*) FROM [{w.staging}]").fetchone()[0] == 0
+        con.close()
+        # abort drops staging, target still intact
+        w.abort([])
+        con = sqlite3.connect(sqlite_db)
+        names = [r[0] for r in con.execute("SELECT name FROM sqlite_master WHERE type='table'")]
+        con.close()
+        assert w.staging not in names
+        assert t.count() == before
+    # a real append, then a real overwrite, still land their rows
+    t.insert(spark.createDataFrame([(2, "more")], "id long, name string"))
+    assert sorted(tuple(r) for r in t.read(spark).collect()) == [(1, "seed"), (2, "more")]
     t.insert(spark.createDataFrame([(7, "new"), (8, "er")], "id long, name string"), mode="overwrite")
     assert sorted(tuple(r) for r in t.read(spark).collect()) == [(7, "new"), (8, "er")]
+
+
+def _file_remote(backend: str, tmp_path, ddl: str, rows: list[tuple]):
+    """Options for a fresh sqlite/duckdb file holding table t(ddl) with rows,
+    and a function listing the file's table names."""
+    path = str(tmp_path / f"w.{backend}")
+    if backend == "sqlite":
+        con = sqlite3.connect(path)
+        list_sql = "SELECT name FROM sqlite_master WHERE type = 'table'"
+        opts = SqliteConnectionOptions(path=path)
+    else:
+        import duckdb
+
+        con = duckdb.connect(path)
+        list_sql = "SELECT table_name FROM information_schema.tables"
+        opts = DuckdbConnectionOptions(path=path)
+    con.execute(f"CREATE TABLE t ({ddl})")
+    if rows:
+        con.executemany(f"INSERT INTO t VALUES ({', '.join('?' for _ in rows[0])})", rows)
+    con.commit()
+    con.close()
+
+    def tables():
+        c = sqlite3.connect(path) if backend == "sqlite" else duckdb.connect(path, read_only=True)
+        try:
+            return [r[0] for r in c.execute(list_sql).fetchall()]
+        finally:
+            c.close()
+
+    return opts, tables
+
+
+@pytest.mark.parametrize("overwrite", [False, True], ids=["append", "overwrite"])
+@pytest.mark.parametrize("backend", ["sqlite", "duckdb"])
+def test_failed_write_job_leaves_target_unchanged(tmp_path, backend, overwrite):
+    """Fault injection through the writer protocol: task 1's write()
+    returns, task 2 raises after its first batch, the job aborts. The
+    target keeps exactly its rows and no staging table is left."""
+    import pyarrow as pa
+    from pyspark.sql.types import StructType
+
+    from datafusion_remote_table_spark.remote.datasource import RemoteTableWriter
+
+    opts, tables = _file_remote(backend, tmp_path, "id BIGINT, name TEXT", [(1, "a"), (2, "b"), (3, "c")])
+    t = RemoteTable(opts, ["t"])
+    schema = StructType.fromDDL("id bigint, name string")
+
+    def batch(lo):
+        return pa.RecordBatch.from_pylist(
+            [{"id": i, "name": f"n{i}"} for i in (lo, lo + 1)],
+            schema=pa.schema([("id", pa.int64()), ("name", pa.string())]),
+        )
+
+    def failing_task():
+        yield batch(20)
+        raise RuntimeError("injected task failure")
+
+    w = RemoteTableWriter(t.spec(), schema, overwrite=overwrite)
+    done = [w.write(iter([batch(10)]))]
+    with pytest.raises(RuntimeError, match="injected"):
+        w.write(failing_task())
+    # a failed task's rows never reach the staging table either, so a
+    # retried task cannot stage its rows twice
+    assert RemoteTable(opts, [w.staging]).count() == 2
+    w.abort(done)
+    assert t.count() == 3
+    assert not [n for n in tables() if n.startswith("__t_staging_")]
+
+
+@pytest.mark.parametrize("mode", ["append", "overwrite"])
+@pytest.mark.parametrize("backend", ["sqlite", "duckdb"])
+def test_column_subset_insert_keeps_target_default(spark, tmp_path, backend, mode):
+    """A DataFrame with a subset of the target's columns: the others take
+    the target's defaults (the staged copy names the writer's columns)."""
+    opts, tables = _file_remote(
+        backend, tmp_path, "id BIGINT, name TEXT, status TEXT NOT NULL DEFAULT 'new'", [(0, "old", "done")]
+    )
+    t = RemoteTable(opts, ["t"])
+    t.insert(spark.createDataFrame([(1, "a")], "id long, name string"), mode=mode)
+    got = sorted(tuple(r) for r in t.read(spark).collect())
+    want = [(1, "a", "new")] if mode == "overwrite" else [(0, "old", "done"), (1, "a", "new")]
+    assert got == want
+    assert not [n for n in tables() if n.startswith("__t_staging_")]
 
 
 # -- duckdb backend (Arrow-native fetch) ------------------------------------

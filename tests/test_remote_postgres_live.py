@@ -194,6 +194,46 @@ def test_insert_append_and_readback_live(spark, pg):
     assert got == [(9, "z")]
 
 
+@pytest.mark.parametrize("mode", ["append", "overwrite"])
+def test_failed_insert_job_leaves_target_unchanged_live(spark, pg, mode):
+    """Fault injection through Spark: a 2-partition insert whose second
+    partition raises (after the first partition's task has written) fails
+    the job; the target keeps its rows and no staging table is left."""
+    import time
+
+    from pyspark.sql import functions as F
+
+    conn = pgwire.connect(pg.host, pg.port, pg.username, "", pg.database)
+    cur = conn.cursor()
+    cur.execute("DROP TABLE IF EXISTS pg_fault")
+    cur.execute("CREATE TABLE pg_fault (id BIGINT, name TEXT)")
+    cur.execute("INSERT INTO pg_fault VALUES (1, 'seed'), (2, 'seed')")
+    conn.commit()
+    conn.close()
+
+    @F.udf("string")
+    def name_or_fail(i):
+        if i >= 2:
+            time.sleep(3)  # the first partition's task finishes first
+            raise RuntimeError("injected task failure")
+        return f"n{i}"
+
+    df = spark.range(0, 4, 1, numPartitions=2).select("id", name_or_fail("id").alias("name"))
+    t = RemoteTable(pg, ["pg_fault"])
+    with pytest.raises(Exception, match="injected task failure"):
+        t.insert(df, mode=mode, coalesce=False)
+
+    conn = pgwire.connect(pg.host, pg.port, pg.username, "", pg.database)
+    try:
+        cur = conn.cursor()
+        cur.execute("SELECT count(*) FROM pg_fault")
+        assert int(cur.fetchone()[0]) == 2
+        cur.execute("SELECT tablename FROM pg_tables")
+        assert not [r[0] for r in cur.fetchall() if r[0].startswith("__pg_fault_staging_")]
+    finally:
+        conn.close()  # an open read transaction would block the next DROP
+
+
 def test_query_source_live(spark, pg):
     t = RemoteTable(pg, "SELECT id, val FROM pg_nums WHERE id <= 10")
     got = t.read(spark).orderBy("id").collect()

@@ -64,7 +64,7 @@ def test_incremental_tailing(spark, log_db, tmp_path):
 
 
 def test_stream_reader_partitions_are_disjoint_and_executor_side(log_db):
-    """The default stream reader plans key-range partitions (the backfill
+    """The stream reader plans key-range partitions (the backfill
     parallelism path); read(partition) is the executor-side Arrow fetch,
     not a driver fetchall."""
     from pyspark.sql.types import StructType
@@ -94,30 +94,6 @@ def test_stream_reader_partitions_are_disjoint_and_executor_side(log_db):
     # caught-up stream: empty microbatch partition yields nothing
     empty = r.partitions(end, end)
     assert len(empty) == 1 and list(r.read(empty[0])) == []
-
-
-def test_stream_reader_simple_fallback(spark, log_db, tmp_path):
-    """.option('reader', 'simple') still selects the driver-side
-    SimpleDataSourceStreamReader."""
-    spark.dataSource.register(RemoteTableStreamDataSource)
-    spec = RemoteScanSpec(options=SqliteConnectionOptions(path=log_db), table=["log"])
-    stream = (
-        spark.readStream.format("remote_table_stream")
-        .schema("id long, v string")
-        .option("spec", spec.to_json())
-        .option("key_column", "id")
-        .option("reader", "simple")
-        .load()
-    )
-    q = (
-        stream.writeStream.format("memory")
-        .queryName("simple_reader_result")
-        .option("checkpointLocation", str(tmp_path / "ckpt2"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    assert spark.table("simple_reader_result").count() == 5
 
 
 def test_events_stream_ts_unit_probe(spark, sf_dir):
