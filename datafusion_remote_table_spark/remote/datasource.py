@@ -17,6 +17,7 @@ Usage:
 
 from __future__ import annotations
 
+import uuid
 from typing import Iterable, Sequence
 
 from pyspark.sql.datasource import (
@@ -116,24 +117,36 @@ class RemoteTableReader(DataSourceReader):
         yield from spec.fetch_arrow(tuple(partition.predicates), arrow_schema)
 
 
+ATTEMPT_COLUMN = "__dfrt_attempt"  # hidden staging column: the attempt that staged a row
+
+
 class RemoteCommit(WriterCommitMessage):
-    pass
+    """A task attempt's staged write; its rows carry ``attempt`` in the
+    staging table's ATTEMPT_COLUMN."""
+
+    def __init__(self, attempt: int):
+        self.attempt = attempt
 
 
 class RemoteTableWriter(DataSourceArrowWriter):
     """Insert path (insert.rs parity), all-or-nothing in both modes.
 
     The writer creates the job's staging table (an empty copy of the
-    target's columns); every task streams its Arrow batches into it in
-    one transaction of its own (chunked executemany; DuckDB ingests the
-    Arrow batches directly). Only `commit()`, after every task
-    succeeded, copies the staged rows into the target by the writer's
-    column list (so target defaults fill the columns the DataFrame
-    lacks) and drops the staging table, in one transaction on one
-    connection; overwrite first deletes the target's rows in that same
-    transaction. `abort()` drops the staging table, so a failed or
-    aborted job leaves the target untouched (the reference's insert path
-    never leaves a partial write visible either).
+    target's columns plus a hidden ATTEMPT_COLUMN); every task attempt
+    streams its Arrow batches into it in one transaction of its own
+    (chunked executemany; DuckDB ingests the Arrow batches directly),
+    tags its rows with a random attempt id and returns that id in its
+    RemoteCommit. Only `commit()`, after every task succeeded, copies
+    the rows of the attempts named in its messages into the target by
+    the writer's column list (so target defaults fill the columns the
+    DataFrame lacks) and drops the staging table, in one transaction on
+    one connection; overwrite first deletes the target's rows in that
+    same transaction. A task that Spark re-ran after its staged insert
+    had committed (executor loss, speculation) therefore has its rows
+    copied once: Spark commits the messages of one attempt per task.
+    `abort()` drops the staging table, so a failed or aborted job leaves
+    the target untouched (the reference's insert path never leaves a
+    partial write visible either).
 
     File-backed remotes (sqlite/duckdb) are single-writer: insert
     through coalesce(1), as RemoteTable.insert() does; server backends
@@ -142,8 +155,6 @@ class RemoteTableWriter(DataSourceArrowWriter):
     def __init__(self, spec: RemoteScanSpec, schema: StructType, overwrite: bool = False):
         if not spec.table:
             raise ValueError("insert requires a table source, not a query")
-        import uuid
-
         self.spec = spec
         self.columns = [f.name for f in schema.fields]
         self.overwrite = overwrite
@@ -153,7 +164,8 @@ class RemoteTableWriter(DataSourceArrowWriter):
         try:
             conn.cursor().execute(
                 f"CREATE TABLE {d.quote_ident(self.staging)} AS "
-                f"SELECT * FROM {d.table_ref(spec.table)} WHERE 1 = 0"
+                f"SELECT {d.quote_ident('__t')}.*, CAST(NULL AS {d.int64_type}) AS {d.quote_ident(ATTEMPT_COLUMN)} "
+                f"FROM {d.aliased_ref(spec.table, '__t')} WHERE 1 = 0"
             )
             conn.commit()
         finally:
@@ -168,7 +180,13 @@ class RemoteTableWriter(DataSourceArrowWriter):
             cur = conn.cursor()
             if self.overwrite:
                 cur.execute(f"DELETE FROM {target}")
-            cur.execute(f"INSERT INTO {target} ({cols}) SELECT {cols} FROM {staging}")
+            # Spark passes one message per task (an empty frame still
+            # runs one task), from the attempt it committed
+            attempts = d.int_values_query([m.attempt for m in messages])
+            cur.execute(
+                f"INSERT INTO {target} ({cols}) SELECT {cols} FROM {staging} "
+                f"WHERE {d.quote_ident(ATTEMPT_COLUMN)} IN ({attempts})"
+            )
             cur.execute(f"DROP TABLE {staging}")
             conn.commit()
         finally:
@@ -185,9 +203,10 @@ class RemoteTableWriter(DataSourceArrowWriter):
             conn.close()
 
     def write(self, iterator) -> RemoteCommit:
+        attempt = uuid.uuid4().int >> 65  # random, positive, fits a BIGINT
         d = self.spec.dialect
         staging = d.quote_ident(self.staging)
-        cols = ", ".join(d.quote_ident(c) for c in self.columns)
+        cols = ", ".join(d.quote_ident(c) for c in [*self.columns, ATTEMPT_COLUMN])
         conn = connect_writable(self.spec.options)
         try:
             if self.spec.options.backend == "duckdb":
@@ -203,23 +222,23 @@ class RemoteTableWriter(DataSourceArrowWriter):
                     conn.register("__dfrt_insert_batch", tbl)
                     conn.execute(
                         f"INSERT INTO {staging} ({cols}) "
-                        f"SELECT * FROM __dfrt_insert_batch"
+                        f"SELECT *, {attempt} FROM __dfrt_insert_batch"
                     )
                     conn.unregister("__dfrt_insert_batch")
                 conn.commit()
-                return RemoteCommit()
+                return RemoteCommit(attempt)
             style = "%s" if self.spec.options.backend in ("postgres", "mysql") else "?"
-            placeholders = ", ".join([style] * len(self.columns))
+            placeholders = ", ".join([style] * (len(self.columns) + 1))
             sql = f"INSERT INTO {staging} ({cols}) VALUES ({placeholders})"
             cur = conn.cursor()
             for batch in iterator:
-                rows = [tuple(row.values()) for row in batch.to_pylist()]
+                rows = [(*row.values(), attempt) for row in batch.to_pylist()]
                 for i in range(0, len(rows), self.spec.options.stream_chunk_size):
                     cur.executemany(sql, rows[i : i + self.spec.options.stream_chunk_size])
             conn.commit()
         finally:
             conn.close()
-        return RemoteCommit()
+        return RemoteCommit(attempt)
 
 
 class RemoteTableDataSource(DataSource):

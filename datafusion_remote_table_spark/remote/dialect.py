@@ -16,6 +16,7 @@ from typing import Sequence
 class Dialect:
     name = "ansi"
     quote_char = '"'
+    int64_type = "BIGINT"  # CAST target for a 64-bit integer column
 
     # -- identifiers -------------------------------------------------------
     def quote_ident(self, ident: str) -> str:
@@ -246,6 +247,11 @@ class Dialect:
         """Schema-inference probe: zero rows, full metadata."""
         return f"SELECT * FROM {self.wrap_subquery(source_query)} {self.limit_clause(0)}"
 
+    def int_values_query(self, values: Sequence[int]) -> str:
+        """A one-column query over integer literals, for ``x IN (...)``."""
+        rows = ", ".join(f"({int(v)})" for v in values)
+        return f"WITH {self.quote_ident('__v')}(v) AS (VALUES {rows}) SELECT v FROM {self.quote_ident('__v')}"
+
 
 class SqliteDialect(Dialect):
     name = "sqlite"
@@ -286,6 +292,10 @@ class PostgresDialect(Dialect):
 class MysqlDialect(Dialect):
     name = "mysql"
     quote_char = "`"
+    int64_type = "SIGNED"
+
+    def int_values_query(self, values: Sequence[int]) -> str:
+        return " UNION ALL ".join(f"SELECT {int(v)}" for v in values)
 
     def escape_string(self, value: str) -> str:
         # MySQL's default string parser treats backslash as an escape
@@ -298,6 +308,10 @@ class MysqlDialect(Dialect):
 
 class OracleDialect(Dialect):
     name = "oracle"
+    int64_type = "NUMBER(19)"
+
+    def int_values_query(self, values: Sequence[int]) -> str:
+        return " UNION ALL ".join(f"SELECT {int(v)} FROM dual" for v in values)
 
     def bytes_literal(self, value: bytes) -> str:
         return f"HEXTORAW('{value.hex()}')"

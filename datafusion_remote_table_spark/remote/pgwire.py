@@ -158,6 +158,10 @@ class PgWireConnection:
         self._buf = b""
         self._in_txn = False
         self._startup(user, dbname)
+        # the timeout bounds connect and start-up only: a statement may
+        # wait on locks or run long, and a timeout mid-reply would leave
+        # the connection mid-protocol
+        self._sock.settimeout(None)
 
     # -- wire helpers ------------------------------------------------------
     def _send(self, type_byte: bytes, payload: bytes) -> None:

@@ -9,6 +9,7 @@ deployment can raise them without code changes.
 from __future__ import annotations
 
 import os
+import stat
 
 from pyspark.sql import SparkSession
 
@@ -190,11 +191,53 @@ TABLES = (
 )
 
 
+# Per-file metadata memo for load_tables: (realpath, st_size, st_mtime_ns,
+# st_ino) -> (Spark StructType, ns-timestamp column names). It grows by one
+# entry per distinct file read. Entries are whole tuples stored and read by
+# single dict operations, so concurrent callers see an entry or none; two
+# concurrent misses both infer, and either result is the same.
+_FILE_SCHEMAS: dict[tuple[str, int, int, int], tuple] = {}
+
+
+def _read_parquet(spark: SparkSession, path: str):
+    """``spark.read.parquet(path)`` and the names of its nanosecond
+    timestamp columns, both memoized per file identity."""
+    real = os.path.realpath(path)
+    st = os.stat(real)
+    # a parquet directory can change without its own stat changing
+    key = (real, st.st_size, st.st_mtime_ns, st.st_ino) if stat.S_ISREG(st.st_mode) else None
+    hit = _FILE_SCHEMAS.get(key)
+    if hit is not None:
+        return spark.read.schema(hit[0]).parquet(path), hit[1]
+    import pyarrow.parquet as pq
+    import pyarrow.types as pat
+
+    df = spark.read.parquet(path)  # Spark's own inference: one job
+    ns_cols = tuple(
+        field.name
+        for field in pq.ParquetFile(path).schema_arrow
+        if pat.is_timestamp(field.type) and field.type.unit == "ns"
+    )
+    if key is not None:
+        _FILE_SCHEMAS[key] = (df.schema, ns_cols)
+    return df, ns_cols
+
+
 def load_tables(spark: SparkSession, sf_dir: str, names: tuple[str, ...] = TABLES) -> dict:
     """Load the driver-generated parquet tables and register temp views.
 
     Reads are plain ``spark.read.parquet`` so Catalyst keeps full
     pushdown/pruning; views let plans be written in SQL where clearer.
+
+    What a file's metadata says is memoized per file identity
+    (realpath, size, mtime_ns, inode): Spark's inferred ``StructType``
+    and the names of the nanosecond-timestamp columns in the parquet
+    footer. A repeat call reads with ``spark.read.schema(s).parquet``,
+    which runs no Spark job (inference runs one per table), and skips
+    the footer read; symlinked copies share the original's entry, and a
+    rewritten or renamed-over file misses. No data is cached: every call
+    returns fresh lazy plans over the file, and re-registers the views
+    (callers re-point the same view names at derived frames).
 
     STRICT since round 8: a missing sf_dir or any missing requested
     table raises :class:`TestDataNotFoundError` for every caller
@@ -202,8 +245,6 @@ def load_tables(spark: SparkSession, sf_dir: str, names: tuple[str, ...] = TABLE
     partial dict, which surfaced as confusing downstream
     TABLE_OR_VIEW_NOT_FOUND errors).
     """
-    import pyarrow.parquet as pq
-    import pyarrow.types as pat
     from pyspark.sql import functions as F
 
     ensure_runtime_confs(spark)
@@ -220,22 +261,19 @@ def load_tables(spark: SparkSession, sf_dir: str, names: tuple[str, ...] = TABLE
             f"sf_dir {sf_dir!r} lacks parquet for requested tables {missing}; "
             f"present: {sorted(f for f in os.listdir(sf_dir) if f.endswith('.parquet'))}"
         )
-    parallelism = spark.sparkContext.defaultParallelism
     dfs = {}
     for name in names:
         path = os.path.join(sf_dir, f"{name}.parquet")
         # existence was checked above (strict missing-table probe)
-        df = spark.read.parquet(path)
+        df, ns_cols = _read_parquet(spark, path)
         # Note: these driver-generated files are single-row-group, so a
         # scan is one task; an explicit repartition-at-load was measured
         # and lost (shuffle cost > parallel-agg savings at this SF) —
         # per-row-heavy operators repartition selectively instead.
-        meta = pq.ParquetFile(path)
         # Nanosecond timestamps arrive as long (see nanosAsLong config);
         # truncate to µs — exactly what DuckDB does reading the same file.
-        for field in meta.schema_arrow:
-            if pat.is_timestamp(field.type) and field.type.unit == "ns":
-                df = df.withColumn(field.name, F.expr(f"timestamp_micros({field.name} div 1000)"))
+        for col in ns_cols:
+            df = df.withColumn(col, F.expr(f"timestamp_micros({col} div 1000)"))
         df.createOrReplaceTempView(name)
         dfs[name] = df
     return dfs

@@ -146,6 +146,17 @@ def test_binary_literals_per_dialect():
     assert dialect_for("duckdb").bytes_literal(payload) == "from_hex('01ff')"
 
 
+def test_writer_attempt_sql_per_dialect():
+    """The staged writer's attempt column type and committed-attempt set."""
+    assert dialect_for("postgres").int_values_query([1, 2]) == 'WITH "__v"(v) AS (VALUES (1), (2)) SELECT v FROM "__v"'
+    assert dialect_for("mysql").int_values_query([1, 2]) == "SELECT 1 UNION ALL SELECT 2"
+    assert dialect_for("oracle").int_values_query([1, 2]) == "SELECT 1 FROM dual UNION ALL SELECT 2 FROM dual"
+    assert dialect_for("dm").int_values_query([7]) == "SELECT 7 FROM dual"
+    assert [dialect_for(b).int64_type for b in ("postgres", "sqlite", "duckdb", "mysql", "oracle")] == [
+        "BIGINT", "BIGINT", "BIGINT", "SIGNED", "NUMBER(19)"
+    ]
+
+
 def test_string_literal_quote_doubling():
     for backend in ("postgres", "mysql", "oracle", "dm", "gaussdb", "mdb", "sqlite"):
         assert dialect_for(backend).literal("O'Brien") == "'O''Brien'"

@@ -336,13 +336,14 @@ def test_failed_write_job_leaves_target_unchanged(tmp_path, backend, overwrite):
     returns, task 2 raises after its first batch, the job aborts. The
     target keeps exactly its rows and no staging table is left."""
     import pyarrow as pa
-    from pyspark.sql.types import StructType
+    from pyspark.sql.types import LongType, StringType, StructField, StructType
 
     from datafusion_remote_table_spark.remote.datasource import RemoteTableWriter
 
     opts, tables = _file_remote(backend, tmp_path, "id BIGINT, name TEXT", [(1, "a"), (2, "b"), (3, "c")])
     t = RemoteTable(opts, ["t"])
-    schema = StructType.fromDDL("id bigint, name string")
+    # built without a SparkContext (fromDDL needs one), so the test runs alone
+    schema = StructType([StructField("id", LongType()), StructField("name", StringType())])
 
     def batch(lo):
         return pa.RecordBatch.from_pylist(
@@ -363,6 +364,42 @@ def test_failed_write_job_leaves_target_unchanged(tmp_path, backend, overwrite):
     assert RemoteTable(opts, [w.staging]).count() == 2
     w.abort(done)
     assert t.count() == 3
+    assert not [n for n in tables() if n.startswith("__t_staging_")]
+
+
+@pytest.mark.parametrize("overwrite", [False, True], ids=["append", "overwrite"])
+@pytest.mark.parametrize("backend", ["sqlite", "duckdb"])
+def test_retried_task_rows_are_committed_once(tmp_path, backend, overwrite):
+    """A task whose staged insert committed, then re-ran (executor loss,
+    speculation): commit() receives only the second attempt's message,
+    and the task's rows reach the target once."""
+    import pyarrow as pa
+    from pyspark.sql.types import LongType, StringType, StructField, StructType
+
+    from datafusion_remote_table_spark.remote.datasource import RemoteTableWriter
+
+    opts, tables = _file_remote(backend, tmp_path, "id BIGINT, name TEXT", [(1, "a")])
+    t = RemoteTable(opts, ["t"])
+    batch = pa.RecordBatch.from_pylist(
+        [{"id": 10, "name": "x"}, {"id": 11, "name": "y"}],
+        schema=pa.schema([("id", pa.int64()), ("name", pa.string())]),
+    )
+    schema = StructType([StructField("id", LongType()), StructField("name", StringType())])
+    w = RemoteTableWriter(t.spec(), schema, overwrite=overwrite)
+    w.write(iter([batch]))  # first attempt: staged, then lost
+    w.commit([w.write(iter([batch]))])
+    path = str(tmp_path / f"w.{backend}")
+    if backend == "sqlite":
+        con = sqlite3.connect(path)
+    else:
+        import duckdb
+
+        con = duckdb.connect(path, read_only=True)
+    try:
+        got = sorted(con.execute("SELECT id, name FROM t").fetchall())
+    finally:
+        con.close()
+    assert got == ([] if overwrite else [(1, "a")]) + [(10, "x"), (11, "y")]
     assert not [n for n in tables() if n.startswith("__t_staging_")]
 
 

@@ -234,6 +234,20 @@ def test_failed_insert_job_leaves_target_unchanged_live(spark, pg, mode):
         conn.close()  # an open read transaction would block the next DROP
 
 
+def test_statement_outlives_connect_timeout_live(pg, monkeypatch):
+    """The connect timeout bounds start-up only: a statement whose first
+    reply takes longer still succeeds."""
+    connect = socket.create_connection
+    monkeypatch.setattr(socket, "create_connection", lambda addr, timeout=None: connect(addr, timeout=1))
+    conn = pgwire.connect(pg.host, pg.port, pg.username, "", pg.database)
+    try:
+        cur = conn.cursor()
+        cur.execute("SELECT pg_sleep(2), 7")
+        assert cur.fetchone()[1] == 7
+    finally:
+        conn.close()
+
+
 def test_query_source_live(spark, pg):
     t = RemoteTable(pg, "SELECT id, val FROM pg_nums WHERE id <= 10")
     got = t.read(spark).orderBy("id").collect()
