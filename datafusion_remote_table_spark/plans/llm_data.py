@@ -1232,7 +1232,7 @@ def _lsh_adaptive(E, src="embeddings", target_bucket=50):
 def _sql_dedup_embedding(E):
     cos = E.dot("ea.embedding", "eb.embedding")
     return f"""
-    WITH buckets AS ({_lsh_adaptive(E)}),
+    WITH buckets AS {E.MAT}({_lsh_adaptive(E)}),
     cand AS (
       SELECT DISTINCT a.vec_id AS keep_id, b.vec_id AS dup_id
       FROM buckets a JOIN buckets b
@@ -1528,10 +1528,12 @@ _register_pair("text_top_ngrams", _sql_top_ngrams)
 #   corpus (the 100TB shape; GraphFrames CC is this same loop).
 # - DuckDB oracle: WITH RECURSIVE reachable-label closure.
 def _sql_dedup_pairs(E):
+    # E.MAT on the multiply-read stages: the DuckDB oracles' recursive CC
+    # walk would otherwise recompute the pair join on every step
     return f"""
-    sh AS ({_minhash_shingles(E)}),
+    sh AS {E.MAT}({_minhash_shingles(E)}),
     sig AS ({_minhash_sigs(E, 'sh')}),
-    bands AS ({_minhash_bands(E, 'sig')}),
+    bands AS {E.MAT}({_minhash_bands(E, 'sig')}),
     ok_buckets AS (
       SELECT band_key FROM bands GROUP BY band_key HAVING COUNT(*) <= 1000
     ),
@@ -1541,7 +1543,7 @@ def _sql_dedup_pairs(E):
       JOIN ok_buckets k ON a.band_key = k.band_key
       JOIN bands b ON a.band_key = b.band_key AND a.doc_id < b.doc_id
     ),
-    pairs AS (
+    pairs AS {E.MAT}(
       SELECT c.doc_a, c.doc_b
       FROM cand c
       JOIN sh sa ON c.doc_a = sa.doc_id
@@ -1574,7 +1576,7 @@ def _sql_dedup_clusters_duck():
     edges = _EDGES_SQL.format(pairs="pairs")
     return f"""
     WITH RECURSIVE {_sql_dedup_pairs(E)},
-    edges AS ({edges}),
+    edges AS {E.MAT}({edges}),
     walk(src, lbl) AS (
       SELECT src, MIN(dst) FROM edges GROUP BY src
       UNION
@@ -1655,7 +1657,7 @@ def _sql_cluster_histogram_duck():
     edges = _EDGES_SQL.format(pairs="pairs")
     return f"""
     WITH RECURSIVE {_sql_dedup_pairs(E)},
-    edges AS ({edges}),
+    edges AS {E.MAT}({edges}),
     walk(src, lbl) AS (
       SELECT src, MIN(dst) FROM edges GROUP BY src
       UNION
@@ -2342,7 +2344,7 @@ def _sql_keep_best_duck():
     edges = _EDGES_SQL.format(pairs="pairs")
     return f"""
     WITH RECURSIVE {_sql_dedup_pairs(E)},
-    edges AS ({edges}),
+    edges AS {E.MAT}({edges}),
     walk(src, lbl) AS (
       SELECT src, MIN(dst) FROM edges GROUP BY src
       UNION
@@ -4149,7 +4151,7 @@ def _pca_cov_parts(E, triangle=False):
              CAST(SUM(CAST(a_fp * b_fp AS DECIMAL(38, 0))) AS DOUBLE) AS sab
       FROM cells GROUP BY i, j
     )""",
-        """cov AS (
+        f"""cov AS {E.MAT}(
       SELECT i, j, (sab / n - (sa / n) * (sb / n)) / 1000000000000.0e0 AS c
       FROM agg
     )""",
@@ -4165,9 +4167,11 @@ def _sql_pca_top_component(E, iters=8):
     parts = _pca_cov_parts(E) + [
         "v0 AS (SELECT d, CAST(125000000000 AS BIGINT) AS v_fp FROM dims)",
     ]
+    # E.MAT: DuckDB inlines a plain CTE at every reference, and each step
+    # reads the previous one twice, so the chain would re-expand 2^iters times
     for k in range(1, iters + 1):
         parts.append(
-            f"""w{k} AS (
+            f"""w{k} AS {E.MAT}(
       SELECT c.i AS d,
              CAST(SUM(CAST(CAST(floor(c.c * (CAST(v.v_fp AS DOUBLE) / 1000000000000.0e0)
                                        * 1000000000000000.0e0) AS BIGINT)
@@ -4176,7 +4180,7 @@ def _sql_pca_top_component(E, iters=8):
     )"""
         )
         parts.append(
-            f"""n{k} AS (
+            f"""n{k} AS {E.MAT}(
       SELECT greatest(sqrt(CAST(SUM(CAST(CAST(floor(w * w * 1000000000.0e0) AS BIGINT)
                                          AS DECIMAL(38, 0))) AS DOUBLE) / 1000000000.0e0),
                       0.000000000001e0) AS nrm
@@ -4184,7 +4188,7 @@ def _sql_pca_top_component(E, iters=8):
     )"""
         )
         parts.append(
-            f"""v{k} AS (
+            f"""v{k} AS {E.MAT}(
       SELECT d, CAST(floor(w / nrm * 1000000000000.0e0) AS BIGINT) AS v_fp
       FROM w{k} CROSS JOIN n{k}
     )"""
@@ -5949,20 +5953,20 @@ def _sql_graph_pagerank(E, pairs_src=None):
     # real hubs (rare-gram co-occurrence), so the ranking means something.
     if pairs_src is None:
         prelude = (
-            f"sh AS ({_minhash_shingles(E)}),\n"
+            f"sh AS {E.MAT}({_minhash_shingles(E)}),\n"
             f"    sig AS ({_minhash_sigs(E, 'sh')}),\n"
-            f"    bands AS ({_minhash_bands(E, 'sig')}),\n    "
+            f"    bands AS {E.MAT}({_minhash_bands(E, 'sig')}),\n    "
         )
         pairs = f"(\n    {_containment_cand_prefix(E, 'bands', prelude)}\n    SELECT doc_a, doc_b FROM allcand)"
     else:
         pairs = pairs_src
     return f"""
-    WITH ew AS ({_pr_ew_sql(pairs)}),
+    WITH ew AS {E.MAT}({_pr_ew_sql(pairs)}),
     r0 AS (SELECT DISTINCT src AS node, CAST(1000000 AS BIGINT) AS score FROM ew e0),
-    r1 AS ({_pr_round_sql(E, 'ew', 'r0')}),
-    r2 AS ({_pr_round_sql(E, 'ew', 'r1')}),
-    r3 AS ({_pr_round_sql(E, 'ew', 'r2')}),
-    r4 AS ({_pr_round_sql(E, 'ew', 'r3')})
+    r1 AS {E.MAT}({_pr_round_sql(E, 'ew', 'r0')}),
+    r2 AS {E.MAT}({_pr_round_sql(E, 'ew', 'r1')}),
+    r3 AS {E.MAT}({_pr_round_sql(E, 'ew', 'r2')}),
+    r4 AS {E.MAT}({_pr_round_sql(E, 'ew', 'r3')})
     {_pr_final_sql('ew', 'r4')}
     """
 
@@ -8807,7 +8811,7 @@ def _sql_mix_shift_duck():
     edges = _EDGES_SQL.format(pairs="pairs")
     return f"""
     WITH RECURSIVE {_sql_dedup_pairs(E)},
-    edges AS ({edges}),
+    edges AS {E.MAT}({edges}),
     walk(src, lbl) AS (
       SELECT src, MIN(dst) FROM edges GROUP BY src
       UNION
@@ -9185,7 +9189,7 @@ def _sql_dqi_duck():
     edges = _EDGES_SQL.format(pairs="pairs")
     return f"""
     WITH RECURSIVE {_sql_dedup_pairs(E)},
-    edges AS ({edges}),
+    edges AS {E.MAT}({edges}),
     walk(src, lbl) AS (
       SELECT src, MIN(dst) FROM edges GROUP BY src
       UNION
@@ -11995,7 +11999,7 @@ def _sql_dup_weights_duck():
     edges = _EDGES_SQL.format(pairs="pairs")
     return f"""
     WITH RECURSIVE {_sql_dedup_pairs(E)},
-    edges AS ({edges}),
+    edges AS {E.MAT}({edges}),
     walk(src, lbl) AS (
       SELECT src, MIN(dst) FROM edges GROUP BY src
       UNION

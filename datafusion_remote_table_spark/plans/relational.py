@@ -8792,8 +8792,10 @@ def orders_kruskal_wallis(spark: SparkSession, sf_dir: str) -> DataFrame:
 # conditional entropies 1.607896-1.609135 nats, distinct contributions;
 # efficiency 0.999547 < 1 (near-uniform synthetic behavior, but every
 # defining column varies across rows).
-def _sql_entropy_rate(n_iters: int = 16) -> str:
-    parts = ["""trans AS (
+def _sql_entropy_rate(n_iters: int = 16, mat: str = "") -> str:
+    # mat="MATERIALIZED " for DuckDB, which otherwise re-expands trans
+    # (and its LAG window) and the earlier steps inside every power step
+    parts = [f"""trans AS {mat}(
       SELECT f, t, CAST(c AS DOUBLE) / SUM(c) OVER (PARTITION BY f) AS p
       FROM (
         SELECT prev AS f, event_type AS t, CAST(COUNT(*) AS BIGINT) AS c
@@ -8805,7 +8807,7 @@ def _sql_entropy_rate(n_iters: int = 16) -> str:
       FROM states
     )"""]
     for k in range(1, n_iters + 1):
-        parts.append(f"""pi{k} AS (
+        parts.append(f"""pi{k} AS {mat}(
       SELECT t.t AS s,
              CAST(CAST(SUM(CAST(ROUND(p.p * t.p, 9) AS DECIMAL(18, 9))) AS DECIMAL(18, 9))
                   AS DOUBLE) AS p
@@ -8856,7 +8858,7 @@ def _sql_entropy_rate(n_iters: int = 16) -> str:
     """
 
 
-@register("events_entropy_rate", oracle=_sql_entropy_rate())
+@register("events_entropy_rate", oracle=_sql_entropy_rate(mat="MATERIALIZED "))
 def events_entropy_rate(spark: SparkSession, sf_dir: str) -> DataFrame:
     _t(spark, sf_dir, "events")
     return spark.sql(_sql_entropy_rate())
