@@ -18,6 +18,7 @@ Usage:
 from __future__ import annotations
 
 import uuid
+from contextlib import closing
 from typing import Iterable, Sequence
 
 from pyspark.sql.datasource import (
@@ -28,50 +29,18 @@ from pyspark.sql.datasource import (
     InputPartition,
     WriterCommitMessage,
 )
-from pyspark.sql.types import StructField, StructType
+from pyspark.sql.types import StructType
 
 from .connection import connect, connect_writable
-from .scan import RemoteScanSpec
-from .schema import infer_schema_from_rows, remote_type_to_spark
+from .scan import RemoteScanSpec, remote_schema
 from .unparse import split_filters
-
-
-SAMPLE_ROWS = 100  # rows a DB-API backend's column types are inferred from
-
-
-def remote_schema(conn, spec: RemoteScanSpec, sample: tuple[list[str], list[tuple]] | None = None) -> StructType:
-    """The schema rule both read paths share (table.rs infer_schema
-    parity), on an open connection to spec's remote.
-
-    duckdb: DESCRIBE gives full types. sqlite/DB-API: cursor names + the
-    first SAMPLE_ROWS rows for types (sqlite cursors carry no type
-    metadata for query sources). ``sample`` is (names, rows) of spec's
-    source already fetched on ``conn``; without it the rows are fetched
-    here.
-    """
-    if spec.options.backend == "duckdb":
-        described = conn.execute(
-            f"DESCRIBE SELECT * FROM {spec.dialect.wrap_subquery(spec.source_query())}"
-        ).fetchall()
-        return StructType(
-            [StructField(name, remote_type_to_spark(type_name), True) for name, type_name, *_ in described]
-        )
-    if sample is None:
-        cur = conn.cursor()
-        cur.execute(spec.dialect.compose(spec.table if spec.table else spec.query, limit=SAMPLE_ROWS))
-        sample = [d[0] for d in cur.description], cur.fetchall()
-    names, rows = sample
-    return infer_schema_from_rows(names, rows[:SAMPLE_ROWS])
 
 
 def infer_remote_schema(spec: RemoteScanSpec) -> StructType:
     """Driver-side schema inference for a DataSource read: the shared
     rule on a connection of its own, pruned to spec's columns."""
-    conn = connect(spec.options)
-    try:
+    with closing(connect(spec.options)) as conn:
         schema = remote_schema(conn, spec)
-    finally:
-        conn.close()
     if spec.columns:
         by_name = {f.name: f for f in schema.fields}
         schema = StructType([by_name[c] for c in spec.columns])

@@ -243,10 +243,6 @@ class Dialect:
             return f"{self.table_ref(source)} {self.quote_ident(alias)}"
         return self.wrap_subquery(source, alias)
 
-    def limit0_query(self, source_query: str) -> str:
-        """Schema-inference probe: zero rows, full metadata."""
-        return f"SELECT * FROM {self.wrap_subquery(source_query)} {self.limit_clause(0)}"
-
     def int_values_query(self, values: Sequence[int]) -> str:
         """A one-column query over integer literals, for ``x IN (...)``."""
         rows = ", ".join(f"({int(v)})" for v in values)
@@ -327,7 +323,7 @@ class OracleDialect(Dialect):
 
     def limit_clause(self, n: int) -> str:
         # only reached where a WHERE-level ROWNUM would be wrong (top-k
-        # truncation AFTER ORDER BY, the limit-0 schema probe): FETCH
+        # truncation AFTER ORDER BY): FETCH
         # FIRST runs after the sort (12c+; the reference never pushes
         # ORDER BY so it has no such path)
         return f"FETCH FIRST {n} ROWS ONLY"
@@ -411,9 +407,6 @@ class MdbDialect(Dialect):
         raise NotImplementedError(
             "mdb count pushdown unsupported (mdbtools COUNT(*) returns 0); fetch and count instead"
         )
-
-    def limit0_query(self, source_query: str) -> str:
-        return f"{source_query.strip()} {self.limit_clause(0)}"
 
     def aggregate_query(
         self,

@@ -1,5 +1,6 @@
 """RemoteScanSpec: the serializable description of one remote scan, and
-the executor-side fetch that turns a partition of it into Arrow batches.
+the one fetch that runs its SQL and turns the rows into Arrow batches —
+for DataSource tasks, stream slices and the driver's bounded results.
 
 Parity: /root/reference/remote-table/src/scan.rs (RemoteTableScanExec:
 source + pushed filters + limit + projection) and codec.rs (the spec is
@@ -16,15 +17,21 @@ stream (`stream_chunk_size` still bounds each Arrow batch).
 from __future__ import annotations
 
 import json
-from contextlib import contextmanager
+from contextlib import closing, contextmanager
 from dataclasses import dataclass, field
+from itertools import chain
 from typing import Iterator
 
 import pyarrow as pa
+from pyspark.sql.pandas.types import to_arrow_schema
+from pyspark.sql.types import StructField, StructType
 
 from .connection import connect
 from .dialect import dialect_for
 from .options import ConnectionOptions
+from .schema import infer_schema_from_rows, remote_type_to_spark
+
+SAMPLE_ROWS = 100  # rows a DB-API backend's column types are inferred from
 
 
 @dataclass
@@ -93,6 +100,16 @@ class RemoteScanSpec:
         return RemoteScanSpec(**d)
 
     # -- partition planning (driver side) ----------------------------------
+    def key_bounds(self, column: str) -> tuple:
+        """(MIN, MAX) of ``column`` over the source, in one remote
+        aggregate (an indexed one on a key column)."""
+        d = self.dialect
+        col = d.quote_ident(column)
+        with closing(connect(self.options)) as conn:
+            cur = conn.cursor()
+            cur.execute(f"SELECT MIN({col}), MAX({col}) FROM {d.wrap_subquery(self.source_query())}")
+            return tuple(cur.fetchone())
+
     def partition_predicates(self) -> list[tuple[str, ...]]:
         """Compute per-task WHERE fragments. With a numeric partition
         column: probe min/max once, emit disjoint half-open ranges (first
@@ -104,53 +121,81 @@ class RemoteScanSpec:
         buys nothing and single-partition keeps the row count exact."""
         if not self.partition_column or self.fetch_partitions <= 1 or self.limit is not None:
             return [()]
-        d = self.dialect
-        col = d.quote_ident(self.partition_column)
-        probe = f"SELECT MIN({col}), MAX({col}) FROM {d.wrap_subquery(self.source_query())}"
-        conn = connect(self.options)
-        try:
-            lo, hi = conn.execute(probe).fetchone() if hasattr(conn, "execute") else _cursor_one(conn, probe)
-        finally:
-            conn.close()
+        lo, hi = self.key_bounds(self.partition_column)
         if lo is None or hi is None or lo == hi:
             return [()]
-        n = self.fetch_partitions
-        lo_i, hi_i = int(lo), int(hi) + 1
-        step = max(1, (hi_i - lo_i + n - 1) // n)
-        preds: list[tuple[str, ...]] = []
-        start = lo_i
-        first = True
-        while start < hi_i:
-            end = min(start + step, hi_i)
-            pred = f"{col} >= {start} AND {col} < {end}"
-            if first:
-                pred = f"({pred}) OR {col} IS NULL"
-                first = False
-            preds.append((f"({pred})",))
-            start = end
-        return preds
+        col = self.dialect.quote_ident(self.partition_column)
+        ranges = split_range(int(lo), int(hi) + 1, self.fetch_partitions)
+        preds = [f"({col} >= {s} AND {col} < {e})" for s, e in ranges]
+        preds[0] = f"({preds[0]} OR {col} IS NULL)"
+        return [(p,) for p in preds]
 
-    # -- executor-side fetch ------------------------------------------------
-    def fetch_arrow(self, extra_filters: tuple[str, ...], arrow_schema: pa.Schema) -> Iterator[pa.RecordBatch]:
+    # -- fetch (executor tasks, and the driver for bounded results) ---------
+    def fetch_arrow(
+        self, extra_filters: tuple[str, ...], arrow_schema: pa.Schema | None = None
+    ) -> Iterator[pa.RecordBatch]:
+        """Run the scan's SQL on one connection and stream the result as
+        Arrow batches of at most ``stream_chunk_size`` rows, at least one
+        (possibly empty) batch. The connection closes as soon as the
+        generator ends or is closed.
+
+        Without ``arrow_schema`` (a scan with no column projection) the
+        schema is ``remote_schema``'s, resolved on the same connection,
+        with the first chunk as the DB-API type sample."""
         sql = self.remote_sql(extra_filters)
-        conn = connect(self.options)
-        try:
-            with remote_errors(self.options, sql):
-                if self.options.backend == "duckdb":
-                    # native Arrow path: zero row-materialization
-                    reader = conn.execute(sql).fetch_record_batch(self.options.stream_chunk_size)
-                    for batch in reader:
-                        yield align_batch(batch, arrow_schema)
-                    return
+        size = self.options.stream_chunk_size
+        with closing(connect(self.options)) as conn, remote_errors(self.options, sql):
+            if self.options.backend == "duckdb":
+                # native Arrow path: zero row-materialization
+                if arrow_schema is None:
+                    arrow_schema = to_arrow_schema(remote_schema(conn, self))
+                reader = conn.execute(sql).fetch_record_batch(size)
+                batches = (align_batch(b, arrow_schema) for b in reader)
+            else:
                 cur = conn.cursor()
                 cur.execute(sql)
-                while True:
-                    rows = cur.fetchmany(self.options.stream_chunk_size)
-                    if not rows:
-                        break
-                    yield rows_to_batch(rows, arrow_schema)
-        finally:
-            conn.close()
+                rows = cur.fetchmany(size)
+                if arrow_schema is None:
+                    sample = [d[0] for d in cur.description], rows
+                    arrow_schema = to_arrow_schema(remote_schema(conn, self, sample))
+                chunks = chain([rows], iter(lambda: cur.fetchmany(size), []))
+                batches = (rows_to_batch(r, arrow_schema) for r in chunks)
+            first = next(batches, None)
+            yield pa.RecordBatch.from_pylist([], schema=arrow_schema) if first is None else first
+            yield from batches
+
+
+def remote_schema(conn, spec: RemoteScanSpec, sample: tuple[list[str], list[tuple]] | None = None) -> StructType:
+    """The schema rule every read shares (table.rs infer_schema parity),
+    on an open connection to spec's remote.
+
+    duckdb: DESCRIBE gives full types. sqlite/DB-API: cursor names + the
+    first SAMPLE_ROWS rows for types (sqlite cursors carry no type
+    metadata for query sources). ``sample`` is (names, rows) of spec's
+    source already fetched on ``conn``; without it the rows are fetched
+    here.
+    """
+    if spec.options.backend == "duckdb":
+        described = conn.execute(
+            f"DESCRIBE SELECT * FROM {spec.dialect.wrap_subquery(spec.source_query())}"
+        ).fetchall()
+        return StructType(
+            [StructField(name, remote_type_to_spark(type_name), True) for name, type_name, *_ in described]
+        )
+    if sample is None:
+        cur = conn.cursor()
+        cur.execute(spec.dialect.compose(spec.table if spec.table else spec.query, limit=SAMPLE_ROWS))
+        sample = [d[0] for d in cur.description], cur.fetchall()
+    names, rows = sample
+    return infer_schema_from_rows(names, rows[:SAMPLE_ROWS])
+
+
+def split_range(lo: int, hi: int, n: int) -> list[tuple[int, int]]:
+    """Consecutive (start, end) steps from ``lo`` to ``hi``, at most ``n``
+    of them, as equal as integer steps allow; the caller decides which
+    end is open."""
+    step = max(1, (hi - lo + n - 1) // n)
+    return [(s, min(s + step, hi)) for s in range(lo, hi, step)]
 
 
 @contextmanager
@@ -176,9 +221,3 @@ def align_batch(batch: pa.RecordBatch, schema: pa.Schema) -> pa.RecordBatch:
         return batch
     arrays = [batch.column(i).cast(schema.field(i).type) for i in range(batch.num_columns)]
     return pa.RecordBatch.from_arrays(arrays, schema=schema)
-
-
-def _cursor_one(conn, sql):
-    cur = conn.cursor()
-    cur.execute(sql)
-    return cur.fetchone()

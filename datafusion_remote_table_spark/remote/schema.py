@@ -4,8 +4,9 @@ Parity: /root/reference/remote-table/src/schema.rs — `RemoteType` maps
 each backend's native types to Arrow; here they map to Spark SQL types.
 The mapping tables cover the README's supported-type matrix (Postgres /
 MySQL / Oracle / SQLite / DM / GaussDB / MDB) so a user-specified remote
-schema round-trips; live inference uses a LIMIT-0 probe plus a one-row
-type sample where the driver reports no metadata (sqlite query sources).
+schema round-trips; live inference uses duckdb's DESCRIBE, or a
+100-row type sample where the driver reports no metadata (sqlite query
+sources).
 """
 
 from __future__ import annotations

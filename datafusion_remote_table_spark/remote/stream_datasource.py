@@ -34,8 +34,7 @@ from typing import Sequence
 from pyspark.sql.datasource import DataSource, DataSourceStreamReader, InputPartition
 from pyspark.sql.types import StructType
 
-from .connection import connect
-from .scan import RemoteScanSpec
+from .scan import RemoteScanSpec, split_range
 
 
 class RemoteKeyRangePartition(InputPartition):
@@ -60,25 +59,11 @@ class RemoteTableStreamReader(DataSourceStreamReader):
             self.spec.columns = [f.name for f in schema.fields]
 
     # -- driver-side offset probes (indexed aggregates on the remote) -------
-    def _probe(self, agg: str):
-        d = self.spec.dialect
-        sql = (
-            f"SELECT {agg}({d.quote_ident(self.key_column)}) "
-            f"FROM {d.wrap_subquery(self.spec.source_query())}"
-        )
-        conn = connect(self.spec.options)
-        try:
-            cur = conn.cursor()
-            cur.execute(sql)
-            return cur.fetchone()[0]
-        finally:
-            conn.close()
-
     def initialOffset(self) -> dict:
         return {"last_key": None}
 
     def latestOffset(self) -> dict:
-        return {"last_key": self._probe("MAX")}
+        return {"last_key": self.spec.key_bounds(self.key_column)[1]}
 
     def partitions(self, start: dict, end: dict) -> Sequence[InputPartition]:
         lo, hi = start.get("last_key"), end.get("last_key")
@@ -88,15 +73,8 @@ class RemoteTableStreamReader(DataSourceStreamReader):
         if n == 1 or not isinstance(hi, int):
             return [RemoteKeyRangePartition(lo, hi)]
         if lo is None:
-            lo = self._probe("MIN") - 1  # backfill: start below the smallest key
-        step = max(1, (hi - lo + n - 1) // n)
-        parts = []
-        s = lo
-        while s < hi:
-            e = min(s + step, hi)
-            parts.append(RemoteKeyRangePartition(s, e))
-            s = e
-        return parts
+            lo = self.spec.key_bounds(self.key_column)[0] - 1  # backfill: start below the smallest key
+        return [RemoteKeyRangePartition(s, e) for s, e in split_range(lo, hi, n)]
 
     # -- executor-side fetch --------------------------------------------------
     def read(self, partition: RemoteKeyRangePartition):

@@ -21,16 +21,18 @@ Constructor parity map:
 
 from __future__ import annotations
 
+from contextlib import closing
+
 import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql.pandas.types import to_arrow_schema
+from pyspark.sql.pandas.types import from_arrow_schema, to_arrow_schema
 from pyspark.sql.types import StructType
 
 from ..session import ensure_runtime_confs
 from .connection import connect
-from .datasource import RemoteTableDataSource, infer_remote_schema, remote_schema
+from .datasource import RemoteTableDataSource, infer_remote_schema
 from .options import ConnectionOptions
-from .scan import RemoteScanSpec, align_batch, remote_errors, rows_to_batch
+from .scan import RemoteScanSpec
 from .schema import parse_user_schema
 from .transform import RemoteTransform
 
@@ -117,11 +119,13 @@ class RemoteTable:
         dialect, composed into the remote query alongside any
         Catalyst-pushed filters.
 
-        ``limit`` keeps ``read()`` a lazy DataSource scan, re-run at each
-        action, unlike aggregate/topk, which fetch a bounded result on the
-        driver. Every read serializing one scan spec is also what the
-        traced benchmark run relies on to replay the reader
-        (``perfbench/trace.py``), until the engine records its own spans."""
+        ``read()`` is always a lazy DataSource scan, re-run at each
+        action, ``limit`` or not. Only aggregate/topk fetch a bounded
+        result on the driver (``_bounded``), through the same
+        ``RemoteScanSpec.fetch_arrow`` that the DataSource's tasks run.
+        Every read serializes one scan spec, which the traced benchmark
+        run replays (``perfbench/trace.py``) until the engine records its
+        own spans."""
         pushed: list[str] = []
         if predicate is not None:
             from .predicate import render_predicate
@@ -212,13 +216,14 @@ class RemoteTable:
     def _bounded(self, spark: SparkSession, sql: str, schema, max_rows: int | None = None) -> DataFrame:
         """Read the result of a bounded pushdown.
 
-        At most ``stream_chunk_size`` + 1 rows are fetched on the driver
-        over one connection. A result within one chunk becomes an Arrow
-        local frame: a ``LocalTableScan``, with no Python DataSource job
-        and no Spark task. A larger one, or a known ``max_rows`` above
-        the chunk, goes through the DataSource. The schema is the user
-        schema or the DataSource's rule (``remote_schema``), with the
-        fetched rows as the type sample."""
+        ``RemoteScanSpec.fetch_arrow`` streams it over one connection, and
+        at most two ``stream_chunk_size`` chunks are held on the driver. A
+        result within one chunk becomes an Arrow local frame: a
+        ``LocalTableScan``, with no Python DataSource job and no Spark
+        task. A larger one, or a known ``max_rows`` above the chunk, goes
+        through the DataSource. The schema is the user schema or the
+        DataSource's rule (``scan.remote_schema``), with the first fetched
+        chunk as the type sample."""
         ensure_runtime_confs(spark)
         schema = parse_user_schema(schema) if schema is not None else None
         spec = RemoteScanSpec(
@@ -227,35 +232,18 @@ class RemoteTable:
         cap = self.options.stream_chunk_size
         if max_rows is not None and max_rows > cap:
             return _datasource_frame(spark, spec, schema or infer_remote_schema(spec))
-        duck = self.options.backend == "duckdb"
-        sql = spec.remote_sql()
-        conn = connect(self.options)
-        try:
-            with remote_errors(self.options, sql):
-                if duck:
-                    schema = schema or remote_schema(conn, spec)
-                    chunk, n = [], 0
-                    for batch in conn.execute(sql).fetch_record_batch(cap + 1):
-                        chunk.append(batch)
-                        n += batch.num_rows
-                        if n > cap:
-                            break
-                else:
-                    cur = conn.cursor()
-                    cur.execute(sql)
-                    chunk = []
-                    while len(chunk) <= cap and (rows := cur.fetchmany(cap + 1 - len(chunk))):
-                        chunk.extend(rows)
-                    n = len(chunk)
-                    names = [d[0] for d in cur.description]
-                    schema = schema or remote_schema(conn, spec, (names, chunk))
-        finally:
-            conn.close()
+        chunk, n = [], 0
+        with closing(spec.fetch_arrow((), to_arrow_schema(schema) if schema else None)) as batches:
+            for batch in batches:
+                chunk.append(batch)
+                n += batch.num_rows
+                if n > cap:
+                    break
+        table = pa.Table.from_batches(chunk)
+        schema = schema or from_arrow_schema(table.schema, prefer_timestamp_ntz=True)
         if n > cap:
             return _datasource_frame(spark, spec, schema)
-        arrow_schema = to_arrow_schema(schema)
-        batches = [align_batch(b, arrow_schema) for b in chunk] if duck else [rows_to_batch(chunk, arrow_schema)]
-        return spark.createDataFrame(pa.Table.from_batches(batches, schema=arrow_schema), schema=schema)
+        return spark.createDataFrame(table, schema=schema)
 
     def join_remote(
         self,
@@ -312,62 +300,6 @@ class RemoteTable:
                 n += len(rows)
         finally:
             conn.close()
-
-    # -- JDBC path (cluster-scale alternative) ------------------------------
-    def read_jdbc(
-        self,
-        spark: SparkSession,
-        partition_column: str | None = None,
-        num_partitions: int = 1,
-        lower_bound: int | None = None,
-        upper_bound: int | None = None,
-    ) -> DataFrame:
-        """Read through Spark's built-in JDBC source — the path a real
-        cluster uses when the vendor JDBC driver jar is on the classpath
-        (this container has none, so this raises at connect time; the
-        DB-API DataSource above is the self-contained path). Predicate
-        pushdown, column pruning, and partitioned reads are handled by
-        the JVM JDBC source itself."""
-        url = self.jdbc_url()
-        reader = (
-            spark.read.format("jdbc")
-            .option("url", url)
-            .option(
-                "dbtable",
-                self.dialect_ref() if self.table else f"({self.query}) AS __remote_t",
-            )
-            .option("user", getattr(self.options, "username", ""))
-            .option("password", getattr(self.options, "password", ""))
-        )
-        if partition_column:
-            reader = (
-                reader.option("partitionColumn", partition_column)
-                .option("numPartitions", num_partitions)
-                .option("lowerBound", lower_bound)
-                .option("upperBound", upper_bound)
-            )
-        return reader.load()
-
-    def jdbc_url(self) -> str:
-        o = self.options
-        urls = {
-            "postgres": f"jdbc:postgresql://{getattr(o, 'host', '')}:{getattr(o, 'port', 0)}/{getattr(o, 'database', '')}",
-            "gaussdb": f"jdbc:postgresql://{getattr(o, 'host', '')}:{getattr(o, 'port', 0)}/{getattr(o, 'database', '')}",
-            "mysql": f"jdbc:mysql://{getattr(o, 'host', '')}:{getattr(o, 'port', 0)}/{getattr(o, 'database', '')}",
-            "oracle": f"jdbc:oracle:thin:@//{getattr(o, 'host', '')}:{getattr(o, 'port', 0)}/{getattr(o, 'service_name', '')}",
-            "dm": f"jdbc:dm://{getattr(o, 'host', '')}:{getattr(o, 'port', 0)}",
-            "sqlite": f"jdbc:sqlite:{getattr(o, 'path', '')}",
-            "mdb": f"jdbc:ucanaccess://{getattr(o, 'path', '')}",
-        }
-        url = urls.get(o.backend)
-        if url is None:
-            raise NotImplementedError(f"no JDBC url mapping for backend {o.backend}")
-        return url
-
-    def dialect_ref(self) -> str:
-        from .dialect import dialect_for
-
-        return dialect_for(self.options.backend).table_ref(self.table or [])
 
     # -- commands (SourceCommand parity, table.rs:55-58) --------------------
     @staticmethod

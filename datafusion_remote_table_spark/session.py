@@ -60,10 +60,7 @@ def get_spark(app_name: str = "datafusion-remote-table-spark", master: str | Non
         # cold, preferSortMergeJoin already false): dedup_graph_pagerank
         # 3.27->2.94, embedding_knn_symmetry_audit 3.19->2.91, controls
         # within noise.
-        .config(
-            "spark.sql.adaptive.maxShuffledHashJoinLocalMapThreshold",
-            os.environ.get("SPARK_GRAFT_AQE_SHJ_THRESHOLD", str(64 * 1024 * 1024)),
-        )
+        .config("spark.sql.adaptive.maxShuffledHashJoinLocalMapThreshold", str(64 * 1024 * 1024))
         .config("spark.sql.shuffle.partitions", DEFAULT_SHUFFLE_PARTITIONS)
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.execution.arrow.maxRecordsPerBatch", "10000")
@@ -76,12 +73,9 @@ def get_spark(app_name: str = "datafusion-remote-table-spark", master: str | Non
         # SHJ at-or-faster on all 6 SMJ-carrying probes (e.g.
         # tokenize_unigram_prune 3.96->3.61, dedup_graph_pagerank
         # 3.55->3.22, embedding_knn_symmetry_audit 3.46->3.19) with the
-        # no-SMJ control within noise. Env-overridable for clusters
-        # that want the sort-based spill path back.
-        .config(
-            "spark.sql.join.preferSortMergeJoin",
-            os.environ.get("SPARK_GRAFT_PREFER_SMJ", "false"),
-        )
+        # no-SMJ control within noise. A cluster that wants the
+        # sort-based spill path back sets this conf on its session.
+        .config("spark.sql.join.preferSortMergeJoin", "false")
         .config("spark.sql.parquet.filterPushdown", "true")
         # Python DataSource filter pushdown (remote-table scans)
         .config("spark.sql.python.filterPushdown.enabled", "true")

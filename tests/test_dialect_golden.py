@@ -181,20 +181,6 @@ def test_timestamp_and_date_literals():
 
 
 # ---------------------------------------------------------------------------
-# schema-probe SQL (limit_1_query_if_possible parity; ours probes LIMIT 0)
-def test_probe_queries_are_dialect_valid():
-    assert (
-        dialect_for("postgres").limit0_query('SELECT * FROM "t"')
-        == 'SELECT * FROM (SELECT * FROM "t") AS "__remote_t" LIMIT 0'
-    )
-    # Oracle probe must not say LIMIT
-    probe = dialect_for("oracle").limit0_query('SELECT * FROM "t"')
-    assert "LIMIT" not in probe and "FETCH FIRST 0 ROWS ONLY" in probe
-    # Jet probe is flat
-    assert dialect_for("mdb").limit0_query("SELECT * FROM [t]") == "SELECT * FROM [t] LIMIT 0"
-
-
-# ---------------------------------------------------------------------------
 # serde keeps the composed SQL stable for every server dialect
 @pytest.mark.parametrize(
     "opts",

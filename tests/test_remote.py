@@ -448,8 +448,8 @@ def test_gaussdb_dm_dialects():
 
 
 def test_gaussdb_dm_backends_fully_wired():
-    """Options serde round trip, dialect SQL composition, JDBC URL, and a
-    clean import-gated connect error for the DM/GaussDB backends
+    """Options serde round trip, dialect SQL composition, and a clean
+    import-gated connect error for the DM/GaussDB backends
     (reference connection/gaussdb.rs, connection/dm/) — no live server
     needed, same as the reference's dialect-level tests."""
     from datafusion_remote_table_spark.remote import (
@@ -485,10 +485,6 @@ def test_gaussdb_dm_backends_fully_wired():
     assert g.remote_sql(('"id" = 1',)) == 'SELECT * FROM "t" WHERE ("id" = 1)'
     d = RemoteScanSpec(options=DmConnectionOptions(), table=["t"], limit=2)
     assert d.remote_sql() == 'SELECT * FROM "t" LIMIT 2'  # LIMIT group, not ROWNUM
-    from datafusion_remote_table_spark.remote import RemoteTable
-
-    assert RemoteTable(DmConnectionOptions(host="h", port=5236), ["t"]).jdbc_url() == "jdbc:dm://h:5236"
-    assert "jdbc:postgresql://" in RemoteTable(GaussdbConnectionOptions(host="h"), ["t"]).jdbc_url()
 
 
 # -- empty projection (postgres.rs empty_projection parity) ------------------
@@ -515,28 +511,6 @@ def test_empty_projection_count(spark, sqlite_db):
 def test_various_remote_sqls(spark, sqlite_db, sql, expected):
     t = RemoteTable(SqliteConnectionOptions(path=sqlite_db), sql)
     assert [tuple(r) for r in t.read(spark).collect()] == expected
-
-
-def test_jdbc_url_mapping(sqlite_db):
-    from datafusion_remote_table_spark.remote.options import (
-        MysqlConnectionOptions,
-        OracleConnectionOptions,
-        PostgresConnectionOptions,
-    )
-
-    assert RemoteTable(
-        PostgresConnectionOptions(host="h", port=5432, database="d"), ["t"]
-    ).jdbc_url() == "jdbc:postgresql://h:5432/d"
-    assert RemoteTable(
-        MysqlConnectionOptions(host="h", port=3306, database="d"), ["t"]
-    ).jdbc_url() == "jdbc:mysql://h:3306/d"
-    assert RemoteTable(
-        OracleConnectionOptions(host="h", port=1521, service_name="s"), ["t"]
-    ).jdbc_url() == "jdbc:oracle:thin:@//h:1521/s"
-    assert RemoteTable(SqliteConnectionOptions(path=sqlite_db), ["t"]).jdbc_url().startswith("jdbc:sqlite:")
-    with pytest.raises(NotImplementedError):
-        from datafusion_remote_table_spark.remote.options import DuckdbConnectionOptions
-        RemoteTable(DuckdbConnectionOptions(path="x"), ["t"]).jdbc_url()
 
 
 def test_filter_on_transformed_column_not_pushed(spark, sqlite_db):
@@ -590,10 +564,6 @@ def test_mdb_backend_fully_wired():
     assert remote_type_to_spark("Currency") == T.DecimalType(19, 4)
     assert remote_type_to_spark("Memo") == T.StringType()
     assert remote_type_to_spark("OLE Object") == T.BinaryType()
-
-    from datafusion_remote_table_spark.remote import RemoteTable
-
-    assert RemoteTable(back, ["t"]).jdbc_url() == "jdbc:ucanaccess:///data/x.mdb"
 
 
 def test_count_falls_back_to_fetch_when_dialect_cannot_push(sqlite_db, monkeypatch):
@@ -770,7 +740,9 @@ def test_bounded_pushdowns_match_datasource(spark, typed_remotes, backend):
 @pytest.mark.parametrize("backend", ["sqlite", "duckdb"])
 def test_bounded_pushdowns_past_one_chunk_use_datasource(spark, typed_remotes, backend):
     opts = typed_remotes[backend]
-    t = RemoteTable(type(opts)(path=opts.path, stream_chunk_size=2), ["typed"])
+    # one valve slot: a fetch abandoned past the chunk that kept its
+    # connection open would make the next connect wait out the valve
+    t = RemoteTable(type(opts)(path=opts.path, stream_chunk_size=2, pool_max_size=1), ["typed"])
     aggs = [("COUNT(*)", "rows")]
     df = t.aggregate(spark, group_by=["g"], aggs=aggs)
     assert "BatchScan" in _plan(df) and "LocalTableScan" not in _plan(df)
@@ -789,6 +761,7 @@ def test_bounded_pushdowns_past_one_chunk_use_datasource(spark, typed_remotes, b
     sql = dialect_for(backend).aggregate_query(["typed"], ["g"], aggs, filters=none)
     _assert_matches_datasource(spark, df, opts, sql)
     assert df.collect() == []
+    assert t.count() == 4
 
 
 def test_remote_errors_name_backend_and_sql(spark, sqlite_db):

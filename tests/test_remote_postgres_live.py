@@ -7,10 +7,10 @@ dialect against a real server instead of golden SQL. The container
 ships PostgreSQL server binaries but no Python driver, so the scan/
 insert path runs through remote/pgwire.py (the psycopg2 fallback).
 
-The fixture initdb's a throwaway cluster on a private port with trust
-auth; postgres refuses to run as root, so when the test process is root
-every server command runs via ``su postgres``. Skipped cleanly where
-binaries or the postgres user are unavailable.
+The fixture boots a throwaway trust-auth cluster on a private port with
+``remote/pglocal.py`` (under root every server command runs via ``su
+postgres``). Skipped cleanly where binaries or the postgres user are
+unavailable.
 """
 
 from __future__ import annotations
@@ -18,64 +18,34 @@ from __future__ import annotations
 import datetime as dt
 import os
 import shutil
+import signal
 import socket
 import subprocess
+import sys
 import tempfile
+import uuid
 from decimal import Decimal
 
 import pytest
 
 from datafusion_remote_table_spark.remote import RemoteTable
-from datafusion_remote_table_spark.remote.options import PostgresConnectionOptions
 from datafusion_remote_table_spark.remote import pgwire
+from datafusion_remote_table_spark.remote.pglocal import start_local_postgres
 
 _HAVE_PG = shutil.which("initdb") is not None and shutil.which("pg_ctl") is not None
 
 pytestmark = pytest.mark.skipif(not _HAVE_PG, reason="PostgreSQL server binaries not installed")
 
 
-def _run_server_cmd(cmd: str) -> subprocess.CompletedProcess:
-    """Run a postgres server command, dropping root if needed."""
-    if os.geteuid() == 0:
-        # cd / first: su's target user usually cannot read root's cwd
-        cmd = f"cd / && {cmd}"
-        return subprocess.run(["su", "postgres", "-c", cmd], capture_output=True, text=True)
-    return subprocess.run(["bash", "-c", cmd], capture_output=True, text=True)
-
-
-def _free_port() -> int:
-    with socket.socket() as s:
-        s.bind(("127.0.0.1", 0))
-        return s.getsockname()[1]
-
-
 @pytest.fixture(scope="module")
 def pg(request):
-    work = tempfile.mkdtemp(prefix="dfrt_pg_live_")
-    if os.geteuid() == 0:
-        try:
-            shutil.chown(work, user="postgres", group="postgres")
-        except (LookupError, PermissionError):
-            pytest.skip("no postgres user to run the server as")
-    port = _free_port()
-    data = os.path.join(work, "data")
-    r = _run_server_cmd(f"initdb -D {data} -U dfrt -A trust")
-    if r.returncode != 0:
-        pytest.skip(f"initdb failed: {r.stderr[-300:]}")
-    r = _run_server_cmd(
-        f"pg_ctl -D {data} -o '-p {port} -c listen_addresses=127.0.0.1 -k {work}' "
-        f"-l {work}/pg.log -w start"
-    )
-    if r.returncode != 0:
-        pytest.skip(f"pg_ctl start failed: {r.stderr[-300:]}")
+    started = start_local_postgres("dfrt_pg_live_")
+    if started is None:
+        pytest.skip("cannot start a local PostgreSQL server (initdb/pg_ctl or the postgres user)")
+    opts, stop = started
+    request.addfinalizer(stop)
 
-    def fin():
-        _run_server_cmd(f"pg_ctl -D {data} -m immediate stop")
-        shutil.rmtree(work, ignore_errors=True)
-
-    request.addfinalizer(fin)
-
-    conn = pgwire.connect("127.0.0.1", port, "dfrt", "", "postgres")
+    conn = pgwire.connect(opts.host, opts.port, opts.username, "", opts.database)
     cur = conn.cursor()
     # the reference's supported-type matrix (postgres.rs
     # supported_postgres_types), restricted to text-protocol types
@@ -104,7 +74,7 @@ def pg(request):
     cur.execute("CREATE TABLE pg_sink (id INT, name TEXT)")
     conn.commit()
     conn.close()
-    return PostgresConnectionOptions(host="127.0.0.1", port=port, username="dfrt", database="postgres")
+    return opts
 
 
 def test_supported_postgres_types_roundtrip(spark, pg):
@@ -350,3 +320,42 @@ def test_gaussdb_backend_live_via_pg_wire(spark, pg):
     df = RemoteTable(opts, ["pg_nums"]).read(spark)
     assert df.count() == 100
     assert df.filter("id = 42").collect()[0].val == 420
+
+
+def test_orphaned_cluster_is_reaped_on_next_start():
+    """A starter killed before it runs its stop function (SIGKILL; a
+    SIGTERM skips atexit too) leaves its postmaster running. The next
+    start stops that server and removes its directory."""
+    prefix = f"dfrt_pg_orphan_{uuid.uuid4().hex[:8]}_"
+    child = subprocess.Popen(
+        [
+            sys.executable,
+            "-c",
+            "import sys\n"
+            "from datafusion_remote_table_spark.remote.pglocal import start_local_postgres\n"
+            f"started = start_local_postgres({prefix!r})\n"
+            "print(started[0].port if started else 0, flush=True)\n"
+            "sys.stdin.read()\n",
+        ],
+        stdin=subprocess.PIPE,
+        stdout=subprocess.PIPE,
+        text=True,
+        cwd=os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
+    )
+    try:
+        port = int(child.stdout.readline() or 0)
+    finally:
+        child.send_signal(signal.SIGKILL)
+        child.wait()
+    if not port:
+        pytest.skip("cannot start a local PostgreSQL server (initdb/pg_ctl or the postgres user)")
+    tmp = tempfile.gettempdir()
+    (orphan,) = [os.path.join(tmp, n) for n in os.listdir(tmp) if n.startswith(prefix)]
+    socket.create_connection(("127.0.0.1", port), timeout=5).close()  # still serving
+
+    started = start_local_postgres(prefix)
+    assert started is not None
+    started[1]()
+    assert not os.path.exists(orphan)
+    with pytest.raises(OSError):
+        socket.create_connection(("127.0.0.1", port), timeout=5)
