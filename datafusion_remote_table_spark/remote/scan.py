@@ -74,8 +74,18 @@ class RemoteScanSpec:
             limit=self.limit,
         )
 
-    def count_sql(self) -> str:
-        return self.dialect.count_query(self.table if self.table else self.query)
+    def count_sql(self, limit: int | None = None) -> str:
+        """``SELECT COUNT(1)`` over the scan's rows: the source with the
+        pushed filters and limit (a projection cannot change the count),
+        and at most ``limit`` rows of it when given. Nothing pushed keeps
+        the flat count1 shape (try_count1_query parity). Raises
+        NotImplementedError for a dialect that cannot push a count."""
+        if self.limit is not None:
+            limit = self.limit if limit is None else min(limit, self.limit)
+        source = self.table if self.table else self.query
+        if self.pushed_filters or limit is not None:
+            source = self.dialect.compose(source, filters=self.pushed_filters, limit=limit)
+        return self.dialect.count_query(source)
 
     # -- serde (codec.rs parity) -------------------------------------------
     def to_json(self) -> str:
@@ -99,16 +109,24 @@ class RemoteScanSpec:
         d["options"] = ConnectionOptions.from_dict(d["options"])
         return RemoteScanSpec(**d)
 
-    # -- partition planning (driver side) ----------------------------------
+    # -- driver-side probes: partition planning, counts ---------------------
     def key_bounds(self, column: str) -> tuple:
         """(MIN, MAX) of ``column`` over the source, in one remote
         aggregate (an indexed one on a key column)."""
         d = self.dialect
         col = d.quote_ident(column)
-        with closing(connect(self.options)) as conn:
+        return tuple(self._fetchone(f"SELECT MIN({col}), MAX({col}) FROM {d.wrap_subquery(self.source_query())}"))
+
+    def count(self, limit: int | None = None) -> int:
+        """The scan's row count (``count_sql``), counting at most ``limit``
+        rows: one remote aggregate, one integer back over the wire."""
+        return int(self._fetchone(self.count_sql(limit))[0])
+
+    def _fetchone(self, sql: str) -> tuple:
+        with closing(connect(self.options)) as conn, remote_errors(self.options, sql):
             cur = conn.cursor()
-            cur.execute(f"SELECT MIN({col}), MAX({col}) FROM {d.wrap_subquery(self.source_query())}")
-            return tuple(cur.fetchone())
+            cur.execute(sql)
+            return cur.fetchone()
 
     def partition_predicates(self) -> list[tuple[str, ...]]:
         """Compute per-task WHERE fragments. With a numeric partition

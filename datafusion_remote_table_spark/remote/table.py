@@ -2,8 +2,8 @@
 `RemoteTable` (/root/reference/remote-table/src/table.rs):
 
     table = RemoteTable(SqliteConnectionOptions(path=...), "select ...")
-    df = table.read(spark)            # filters push down via Catalyst
-    table.register(spark, "remote_t") # then spark.sql over it
+    df = table.read(spark)            # one chunk: a local frame; else filters push down via Catalyst
+    table.register(spark, "remote_t") # a lazy view, then spark.sql over it
     table.insert(df2)                 # write-back (insert.rs parity)
     n = table.count()                 # remote count(*) pushdown
 
@@ -32,7 +32,7 @@ from ..session import ensure_runtime_confs
 from .connection import connect
 from .datasource import RemoteTableDataSource, infer_remote_schema
 from .options import ConnectionOptions
-from .scan import RemoteScanSpec
+from .scan import RemoteScanSpec, remote_errors
 from .schema import parse_user_schema
 from .transform import RemoteTransform
 
@@ -49,6 +49,59 @@ def _datasource_frame(spark: SparkSession, spec: RemoteScanSpec, schema: StructT
     """A lazy read of ``spec`` through the Python DataSource."""
     _register_datasource(spark)
     return spark.read.format("remote_table").schema(schema).option("spec", spec.to_json()).load()
+
+
+def _bounded(spark: SparkSession, spec: RemoteScanSpec, schema=None, max_rows: int | None = None) -> DataFrame:
+    """Read a scan that may fit one ``stream_chunk_size`` chunk.
+
+    ``RemoteScanSpec.fetch_arrow`` streams it over one connection, and at
+    most two chunks are held on the driver. A result within one chunk
+    becomes an Arrow local frame: a ``LocalTableScan``, with no Python
+    DataSource job and no Spark task. A larger one, or a known
+    ``max_rows`` above the chunk, goes through the DataSource; so does a
+    result that grew past the chunk after ``max_rows`` was counted. The
+    schema is the given one, or the DataSource's rule
+    (``scan.remote_schema``) with the first fetched chunk as the type
+    sample.
+
+    The fetch runs on a JSON copy of ``spec`` whose projection is the
+    schema's, as the DataSource reader's is; that JSON is also the one
+    scan spec a read serializes, which the traced benchmark run replays
+    (``perfbench/trace.py``)."""
+    ensure_runtime_confs(spark)
+    schema = parse_user_schema(schema) if schema is not None else None
+    spec = RemoteScanSpec.from_json(spec.to_json())
+    if schema is not None and spec.columns is None:
+        spec.columns = [f.name for f in schema.fields]
+    cap = spec.options.stream_chunk_size
+    if max_rows is not None and max_rows > cap:
+        return _datasource_frame(spark, spec, schema or infer_remote_schema(spec))
+    chunk, n = [], 0
+    with closing(spec.fetch_arrow((), to_arrow_schema(schema) if schema else None)) as batches:
+        for batch in batches:
+            chunk.append(batch)
+            n += batch.num_rows
+            if n > cap:
+                break
+    table = pa.Table.from_batches(chunk)
+    schema = schema or from_arrow_schema(table.schema, prefer_timestamp_ntz=True)
+    if n > cap:
+        return _datasource_frame(spark, spec, schema)
+    return spark.createDataFrame(table, schema=schema)
+
+
+def _row_bound(spec: RemoteScanSpec) -> int:
+    """How many rows ``spec`` returns, as far as one chunk tells: its limit
+    when that is within the chunk, else one remote count over at most
+    chunk + 1 rows. A dialect that cannot push a count (mdb) reads as
+    past the chunk."""
+    cap = spec.options.stream_chunk_size
+    if spec.limit is not None and spec.limit <= cap:
+        return spec.limit
+    try:
+        return spec.count(limit=cap + 1)
+    except NotImplementedError:
+        return cap + 1
 
 
 class RemoteTable:
@@ -105,10 +158,11 @@ class RemoteTable:
         fetch_partitions: int = 1,
         predicate: str | None = None,
     ) -> DataFrame:
-        """Load as a DataFrame. Catalyst filter pushdown is automatic
-        (reader.pushFilters); projection and limit push down through the
+        """Load as a DataFrame. Projection and limit push down through the
         explicit arguments (the Python DataSource API has no column/limit
-        pushdown channel yet — scan.rs covers these inside the exec).
+        pushdown channel yet — scan.rs covers these inside the exec);
+        Catalyst filter pushdown (reader.pushFilters) is automatic on a
+        DataSource scan (below).
 
         ``predicate`` is the explicit pushdown escape hatch for
         expressions Catalyst's Python filter API cannot deliver —
@@ -119,13 +173,35 @@ class RemoteTable:
         dialect, composed into the remote query alongside any
         Catalyst-pushed filters.
 
-        ``read()`` is always a lazy DataSource scan, re-run at each
-        action, ``limit`` or not. Only aggregate/topk fetch a bounded
-        result on the driver (``_bounded``), through the same
-        ``RemoteScanSpec.fetch_arrow`` that the DataSource's tasks run.
-        Every read serializes one scan spec, which the traced benchmark
-        run replays (``perfbench/trace.py``) until the engine records its
-        own spans."""
+        A read with one fetch partition whose rows fit one
+        ``stream_chunk_size`` chunk is answered on the driver, as
+        aggregate/topk are (``_bounded``): a ``limit`` within the chunk,
+        or else one remote ``COUNT(1)`` over at most chunk + 1 rows of
+        the composed scan, tells; the rows are then fetched as a snapshot
+        taken at ``read()`` time and returned as an Arrow local frame, and
+        later DataFrame filters run in Spark on it. A relation past one
+        chunk, a partitioned read and a dialect that cannot push a count
+        (mdb) stay a lazy DataSource scan, re-run at each action, with
+        Catalyst filter pushdown. ``register()`` views are always lazy."""
+        return self._read(spark, columns, limit, partition_column, fetch_partitions, predicate)
+
+    def register(self, spark: SparkSession, name: str, **read_kwargs) -> DataFrame:
+        """A temp view over a lazy DataSource read: a view outlives the
+        request, so every query over it reads the remote anew."""
+        df = self._read(spark, lazy=True, **read_kwargs)
+        df.createOrReplaceTempView(name)
+        return df
+
+    def _read(
+        self,
+        spark: SparkSession,
+        columns: list[str] | None = None,
+        limit: int | None = None,
+        partition_column: str | None = None,
+        fetch_partitions: int = 1,
+        predicate: str | None = None,
+        lazy: bool = False,
+    ) -> DataFrame:
         pushed: list[str] = []
         if predicate is not None:
             from .predicate import render_predicate
@@ -148,16 +224,14 @@ class RemoteTable:
         if columns:
             by_name = {f.name: f for f in schema.fields}
             schema = StructType([by_name[c] for c in columns])
-        df = _datasource_frame(spark, spec, schema)
+        if lazy or fetch_partitions > 1:
+            df = _datasource_frame(spark, spec, schema)
+        else:
+            df = _bounded(spark, spec, schema, max_rows=_row_bound(spec))
         if limit is not None:
             df = df.limit(limit)  # remote LIMIT is per-partition; keep Spark semantics exact
         if self.transform is not None:
             df = self.transform.apply(df)
-        return df
-
-    def register(self, spark: SparkSession, name: str, **read_kwargs) -> DataFrame:
-        df = self.read(spark, **read_kwargs)
-        df.createOrReplaceTempView(name)
         return df
 
     # -- relational pushdown paths (parity-plus) ----------------------------
@@ -183,11 +257,10 @@ class RemoteTable:
 
         Pass ``schema`` for backends whose cursors report no aggregate
         types (sqlite infers from a value sample otherwise)."""
-        spec = self.spec()
-        sql = spec.dialect.aggregate_query(
+        sql = self.spec().dialect.aggregate_query(
             self.table or self.query, group_by, aggs, filters=filters, having=having
         )
-        return self._bounded(spark, sql, schema)
+        return _bounded(spark, RemoteScanSpec(options=self.options, query=sql), schema)
 
     def topk(
         self,
@@ -207,43 +280,10 @@ class RemoteTable:
         eagerly on the driver, as a snapshot taken at call time, and
         returned as a local frame; a larger ``k`` reads through the
         DataSource."""
-        spec = self.spec()
-        sql = spec.dialect.topk_query(
+        sql = self.spec().dialect.topk_query(
             self.table or self.query, order_by, k, columns=columns, filters=filters
         )
-        return self._bounded(spark, sql, schema, max_rows=k)
-
-    def _bounded(self, spark: SparkSession, sql: str, schema, max_rows: int | None = None) -> DataFrame:
-        """Read the result of a bounded pushdown.
-
-        ``RemoteScanSpec.fetch_arrow`` streams it over one connection, and
-        at most two ``stream_chunk_size`` chunks are held on the driver. A
-        result within one chunk becomes an Arrow local frame: a
-        ``LocalTableScan``, with no Python DataSource job and no Spark
-        task. A larger one, or a known ``max_rows`` above the chunk, goes
-        through the DataSource. The schema is the user schema or the
-        DataSource's rule (``scan.remote_schema``), with the first fetched
-        chunk as the type sample."""
-        ensure_runtime_confs(spark)
-        schema = parse_user_schema(schema) if schema is not None else None
-        spec = RemoteScanSpec(
-            options=self.options, query=sql, columns=[f.name for f in schema.fields] if schema else None
-        )
-        cap = self.options.stream_chunk_size
-        if max_rows is not None and max_rows > cap:
-            return _datasource_frame(spark, spec, schema or infer_remote_schema(spec))
-        chunk, n = [], 0
-        with closing(spec.fetch_arrow((), to_arrow_schema(schema) if schema else None)) as batches:
-            for batch in batches:
-                chunk.append(batch)
-                n += batch.num_rows
-                if n > cap:
-                    break
-        table = pa.Table.from_batches(chunk)
-        schema = schema or from_arrow_schema(table.schema, prefer_timestamp_ntz=True)
-        if n > cap:
-            return _datasource_frame(spark, spec, schema)
-        return spark.createDataFrame(table, schema=schema)
+        return _bounded(spark, RemoteScanSpec(options=self.options, query=sql), schema, max_rows=k)
 
     def join_remote(
         self,
@@ -275,31 +315,22 @@ class RemoteTable:
 
     # -- pushdown-only paths ------------------------------------------------
     def count(self) -> int:
-        """Remote ``SELECT count(*)`` — the count1_agg pushdown parity.
+        """Remote ``SELECT COUNT(1)`` — the count1_agg pushdown parity
+        (``RemoteScanSpec.count``).
 
         Backends whose dialect can't push the count (mdb: mdbtools
         returns 0 for COUNT(*) — reference mdb/mod.rs
         fetch_table_row_count) stream the select-all and count rows."""
         spec = self.spec()
         try:
-            count_sql = spec.count_sql()
+            return spec.count()
         except NotImplementedError:
-            count_sql = None
-        conn = connect(self.options)
-        try:
+            pass
+        sql = spec.remote_sql()
+        with closing(connect(self.options)) as conn, remote_errors(self.options, sql):
             cur = conn.cursor()
-            if count_sql is not None:
-                cur.execute(count_sql)
-                return int(cur.fetchone()[0])
-            cur.execute(spec.dialect.compose(spec.table if spec.table else spec.query))
-            n = 0
-            while True:
-                rows = cur.fetchmany(self.options.stream_chunk_size)
-                if not rows:
-                    return n
-                n += len(rows)
-        finally:
-            conn.close()
+            cur.execute(sql)
+            return sum(len(rows) for rows in iter(lambda: cur.fetchmany(self.options.stream_chunk_size), []))
 
     # -- commands (SourceCommand parity, table.rs:55-58) --------------------
     @staticmethod

@@ -12,6 +12,7 @@ import sqlite3
 
 import pytest
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 from pyspark.sql.datasource import (
     EqualTo,
     GreaterThan,
@@ -29,6 +30,7 @@ from datafusion_remote_table_spark.remote import (
 )
 from datafusion_remote_table_spark.remote.dialect import dialect_for
 from datafusion_remote_table_spark.remote.schema import remote_type_to_spark
+from datafusion_remote_table_spark.remote.table import _datasource_frame
 from datafusion_remote_table_spark.remote.transform import RemoteTransform
 from datafusion_remote_table_spark.remote.unparse import split_filters, unparse_filter
 
@@ -54,6 +56,17 @@ def sqlite_db(tmp_path_factory):
     conn.commit()
     conn.close()
     return path
+
+
+def _plan(df) -> str:
+    return df._jdf.queryExecution().executedPlan().toString()
+
+
+def _pushed_filters(df) -> str:
+    """The PushedFilters of df's DataSource scan: the Catalyst filters its
+    reader rendered into the remote SQL, as the formatted plan lists them."""
+    text = df._sc._jvm.PythonSQLUtils.explainString(df._jdf.queryExecution(), "formatted")
+    return next(line for line in text.splitlines() if line.startswith("PushedFilters:")).split(": ", 1)[1]
 
 
 # -- supported types (sqlite.rs supported_sqlite_types parity) --------------
@@ -85,7 +98,9 @@ def test_streaming_execution(spark, sqlite_db, source):
     opts = SqliteConnectionOptions(path=sqlite_db, stream_chunk_size=1)
     t = RemoteTable(opts, source)
     assert t.remote_schema() == [("id", "bigint"), ("name", "string")]
-    rows = sorted(t.read(spark).collect())
+    df = t.read(spark)
+    assert "BatchScan" in _plan(df)  # three rows are past a one-row chunk
+    rows = sorted(df.collect())
     assert [tuple(r) for r in rows] == [(1, "Tom"), (2, "Jerry"), (3, "Spike")]
 
 
@@ -115,9 +130,13 @@ def test_pushdown_filters_reach_remote_sql(sqlite_db):
 
 
 def test_pushdown_filters_result(spark, sqlite_db):
-    t = RemoteTable(SqliteConnectionOptions(path=sqlite_db), ["simple_table"])
+    # a chunk below the table's three rows keeps the read on the DataSource
+    t = RemoteTable(SqliteConnectionOptions(path=sqlite_db, stream_chunk_size=2), ["simple_table"])
     df = t.read(spark)
-    assert [tuple(r) for r in df.filter(F.col("id") == 1).collect()] == [(1, "Tom")]
+    one = df.filter(F.col("id") == 1)
+    assert "BatchScan" in _plan(one)
+    assert _pushed_filters(one) == "[IsNotNull(id), EqualTo(id,1)]"
+    assert [tuple(r) for r in one.collect()] == [(1, "Tom")]
     assert [tuple(r) for r in df.filter(F.col("name").startswith("Sp")).collect()] == [(3, "Spike")]
     # unsupported filter (expression on column) still evaluated by Spark
     assert [tuple(r) for r in df.filter((F.col("id") % 2) == 1).orderBy("id").collect()] == [
@@ -661,10 +680,6 @@ def test_insert_from_a_fresh_thread(spark, sqlite_db):
 
 
 # -- bounded pushdowns answered on the driver --------------------------------
-def _plan(df) -> str:
-    return df._jdf.queryExecution().executedPlan().toString()
-
-
 def _sorted_rows(df) -> list:
     return sorted((tuple(r) for r in df.collect()), key=repr)
 
@@ -672,7 +687,12 @@ def _sorted_rows(df) -> list:
 def _assert_matches_datasource(spark, df, opts, sql, schema=None):
     """df (driver path) against the same composed SQL read through the
     DataSource: the same rows and StructType, and no Spark scan job."""
-    ref = RemoteTable(opts, sql, schema=schema).read(spark)
+    t = RemoteTable(opts, sql, schema=schema)
+    _assert_same_frame(df, _datasource_frame(spark, t.spec(), t.schema))
+
+
+def _assert_same_frame(df, ref):
+    """df, a local frame, has ref's (a DataSource scan's) rows and StructType."""
     assert df.schema == ref.schema
     assert _sorted_rows(df) == _sorted_rows(ref)
     assert "LocalTableScan" in _plan(df) and "BatchScan" in _plan(ref)
@@ -764,6 +784,78 @@ def test_bounded_pushdowns_past_one_chunk_use_datasource(spark, typed_remotes, b
     assert t.count() == 4
 
 
+@pytest.mark.parametrize("backend", ["sqlite", "duckdb"])
+def test_read_within_one_chunk_matches_datasource(spark, typed_remotes, backend):
+    """read() on the driver path against the DataSource read of the same
+    spec: decimal, binary, string, NULLs, and (duckdb) timestamps."""
+    opts = typed_remotes[backend]
+    t = RemoteTable(opts, ["typed"])
+    _assert_same_frame(t.read(spark), _datasource_frame(spark, t.spec(), t.schema))
+    cols = ["g", "b"]
+    pruned = StructType([t.schema[c] for c in cols])
+    _assert_same_frame(t.read(spark, columns=cols), _datasource_frame(spark, t.spec(columns=cols), pruned))
+    # sqlite stores no decimal: integer cents under a user schema
+    t = RemoteTable(opts, ["typed"], schema="g string, cents decimal(20,0), b binary, s string, n bigint")
+    _assert_same_frame(t.read(spark), _datasource_frame(spark, t.spec(), t.schema))
+    assert t.read(spark).where("n = 1").first().cents == 1234
+
+
+@pytest.mark.parametrize("backend", ["sqlite", "duckdb"])
+def test_read_past_one_chunk_uses_datasource(spark, typed_remotes, backend):
+    opts = typed_remotes[backend]
+    # one valve slot: a connection the count gate leaked would make the
+    # next connect wait out the valve
+    t = RemoteTable(type(opts)(path=opts.path, stream_chunk_size=2, pool_max_size=1), ["typed"])
+    df = t.read(spark)
+    assert "BatchScan" in _plan(df) and "LocalTableScan" not in _plan(df)
+    assert sorted(r.g for r in df.collect()) == ["a", "a", "b", "c"]
+    assert _pushed_filters(df.filter(F.col("g") == "a")) == "[IsNotNull(g), EqualTo(g,a)]"
+    # within the chunk again: a pushed predicate, or a limit (no count)
+    df = t.read(spark, predicate="n IS NOT NULL")
+    assert "LocalTableScan" in _plan(df) and sorted(r.n for r in df.collect()) == [1, 2]
+    df = t.read(spark, limit=2)
+    assert "LocalTableScan" in _plan(df) and len(df.collect()) == 2
+    assert "BatchScan" in _plan(t.read(spark, limit=3))
+    assert t.count() == 4
+
+
+def test_partitioned_read_and_registered_view_stay_lazy(spark, tmp_path):
+    """fetch_partitions > 1 reads through the DataSource; a register()ed
+    view outlives the request, so it sees rows inserted after it was
+    registered."""
+    path = str(tmp_path / "lazy.db")
+    conn = sqlite3.connect(path)
+    conn.execute("CREATE TABLE t (id INTEGER, name TEXT)")
+    conn.executemany("INSERT INTO t VALUES (?, ?)", [(1, "a"), (2, "b")])
+    conn.commit()
+    conn.close()
+    t = RemoteTable(SqliteConnectionOptions(path=path), ["t"])
+    assert "BatchScan" in _plan(t.read(spark, partition_column="id", fetch_partitions=2))
+    view = t.register(spark, "lazy_remote_view")
+    assert "BatchScan" in _plan(view)
+    assert spark.sql("SELECT COUNT(*) FROM lazy_remote_view").first()[0] == 2
+    t.insert(spark.createDataFrame([(3, "c")], "id long, name string"))
+    assert spark.sql("SELECT COUNT(*) FROM lazy_remote_view").first()[0] == 3
+
+
+def test_read_after_insert_sees_new_rows(spark, tmp_path):
+    """A read within one chunk is a snapshot taken at read() time: a
+    read() taken after an insert sees the new rows, an earlier one not."""
+    path = str(tmp_path / "snap.db")
+    conn = sqlite3.connect(path)
+    conn.execute("CREATE TABLE t (id INTEGER, name TEXT)")
+    conn.execute("INSERT INTO t VALUES (1, 'a')")
+    conn.commit()
+    conn.close()
+    t = RemoteTable(SqliteConnectionOptions(path=path), ["t"])
+    before = t.read(spark)
+    t.insert(spark.createDataFrame([(2, "b")], "id long, name string"))
+    after = t.read(spark)
+    assert "LocalTableScan" in _plan(after)
+    assert sorted(tuple(r) for r in after.collect()) == [(1, "a"), (2, "b")]
+    assert [tuple(r) for r in before.collect()] == [(1, "a")]
+
+
 def test_remote_errors_name_backend_and_sql(spark, sqlite_db):
     import pyarrow as pa
 
@@ -777,6 +869,15 @@ def test_remote_errors_name_backend_and_sql(spark, sqlite_db):
     with pytest.raises(sqlite3.OperationalError) as err:
         list(spec.fetch_arrow((), pa.schema([("no_such_col", pa.int64())])))
     assert err.value.__notes__ == [f"remote sqlite query: {spec.remote_sql()}"]
+    with pytest.raises(sqlite3.OperationalError) as err:
+        RemoteTable(opts, spec.query).count()
+    assert err.value.__notes__ == [f"remote sqlite query: {spec.count_sql()}"]
+    table = RemoteScanSpec(options=opts, table=["no_such_table"])
+    with pytest.raises(sqlite3.OperationalError) as err:
+        table.key_bounds("id")
+    assert err.value.__notes__ == [
+        'remote sqlite query: SELECT MIN("id"), MAX("id") FROM (SELECT * FROM "no_such_table") "__remote_t"'
+    ]
 
 
 def test_mysql_join_query_quoting():
@@ -907,12 +1008,15 @@ def sqlite_float_text_literalizer(value, dialect):
 
 
 def test_custom_literalizer_rewrites_pushed_sql(spark, sqlite_db):
+    # a one-row chunk keeps the two-row table on the DataSource
     t = RemoteTable(
-        SqliteConnectionOptions(path=sqlite_db),
+        SqliteConnectionOptions(path=sqlite_db, stream_chunk_size=1),
         ["supported_data_types"],
         literalizer="tests.test_remote:sqlite_float_text_literalizer",
     )
     df = t.read(spark).filter(F.col("real_col") > 1.0).select("int_col", "real_col")
+    assert "BatchScan" in _plan(df)
+    assert _pushed_filters(df) == "[IsNotNull(real_col), GreaterThan(real_col,1.0)]"
     rows = [tuple(r) for r in df.collect()]
     assert rows == [(1, 1.5)]
     # the rendered literal flows through the serialized spec

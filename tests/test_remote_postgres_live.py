@@ -24,6 +24,7 @@ import subprocess
 import sys
 import tempfile
 import uuid
+from dataclasses import replace
 from decimal import Decimal
 
 import pytest
@@ -31,6 +32,7 @@ import pytest
 from datafusion_remote_table_spark.remote import RemoteTable
 from datafusion_remote_table_spark.remote import pgwire
 from datafusion_remote_table_spark.remote.pglocal import start_local_postgres
+from datafusion_remote_table_spark.remote.table import _datasource_frame
 
 _HAVE_PG = shutil.which("initdb") is not None and shutil.which("pg_ctl") is not None
 
@@ -94,9 +96,18 @@ def test_supported_postgres_types_roundtrip(spark, pg):
     assert all(v is None for v in empty.asDict().values())
 
 
+def _plan(df) -> str:
+    return df._jdf.queryExecution().executedPlan().toString()
+
+
 def test_filter_and_projection_pushdown_live(spark, pg):
-    df = RemoteTable(pg, ["pg_nums"]).read(spark, columns=["id", "val"])
-    got = df.filter("val >= 500 AND id < 60").orderBy("id").collect()
+    # a chunk below the table's 100 rows keeps the read on the DataSource
+    df = RemoteTable(replace(pg, stream_chunk_size=50), ["pg_nums"]).read(spark, columns=["id", "val"])
+    filtered = df.filter("val >= 500 AND id < 60")
+    assert "BatchScan" in _plan(filtered)
+    plan = spark._jvm.PythonSQLUtils.explainString(filtered._jdf.queryExecution(), "formatted")
+    assert "PushedFilters: [IsNotNull(val), IsNotNull(id), GreaterThanOrEqual(val,500), LessThan(id,60)]" in plan
+    got = filtered.orderBy("id").collect()
     assert [r.id for r in got] == list(range(50, 60))
     # the filter must reach the composed remote SQL, not just Spark
     spec = RemoteTable(pg, ["pg_nums"]).spec()
@@ -135,10 +146,24 @@ def test_bounded_pushdowns_match_datasource_live(spark, pg):
         (t.aggregate(spark, group_by=["bool_col"], aggs=aggs), d.aggregate_query(["pg_types"], ["bool_col"], aggs)),
         (t.topk(spark, order_by=order, k=2, columns=cols), d.topk_query(["pg_types"], order, 2, columns=cols)),
     ):
-        ref = RemoteTable(pg, sql).read(spark)
+        ref = RemoteTable(pg, sql)
+        ref = _datasource_frame(spark, ref.spec(), ref.schema)
         assert df.schema == ref.schema
         assert sorted(map(tuple, df.collect()), key=repr) == sorted(map(tuple, ref.collect()), key=repr)
-        assert "LocalTableScan" in df._jdf.queryExecution().executedPlan().toString()
+        assert "LocalTableScan" in _plan(df) and "BatchScan" in _plan(ref)
+    full = next(r for r in df.collect() if r.int4_col is not None)
+    assert (full.numeric_col, bytes(full.bytea_col)) == (Decimal("12.345"), b"\x00\xff")
+    assert full.ts_col == dt.datetime(2026, 1, 2, 3, 4, 5, 123456)
+
+
+def test_read_within_one_chunk_matches_datasource_live(spark, pg):
+    """read() on the driver path against the DataSource read of the same
+    spec over the typed matrix: decimal, timestamp, binary, string, NULLs."""
+    t = RemoteTable(pg, ["pg_types"])
+    df, ref = t.read(spark), _datasource_frame(spark, t.spec(), t.schema)
+    assert df.schema == ref.schema
+    assert sorted(map(tuple, df.collect()), key=repr) == sorted(map(tuple, ref.collect()), key=repr)
+    assert "LocalTableScan" in _plan(df) and "BatchScan" in _plan(ref)
     full = next(r for r in df.collect() if r.int4_col is not None)
     assert (full.numeric_col, bytes(full.bytea_col)) == (Decimal("12.345"), b"\x00\xff")
     assert full.ts_col == dt.datetime(2026, 1, 2, 3, 4, 5, 123456)
